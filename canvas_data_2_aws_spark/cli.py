@@ -20,21 +20,19 @@ import sys
 
 from . import registry, replica, session
 from .operators.merge import apply_changeset
-from .sources.envelope import read_changeset_jsonl
+from .sources.envelope import observe_rejects, read_changeset_jsonl
 
 
 def cmd_initdb(args) -> int:
     spark = session.get_spark(app="cda2-initdb")
     df = session.load_table(spark, args.source_dir, args.table)
-    dest = os.path.join(args.replica, args.table)
-    df.write.mode("overwrite").parquet(dest)
+    n = replica.write(df, os.path.join(args.replica, args.table))
     if replica.has_manifest(args.replica):
         man = replica.load(args.replica)
         man["tables"][args.table] = {"dir": args.table}
         man["version"] += 1
         replica.commit(args.replica, man)
         replica.vacuum(args.replica)
-    n = spark.read.parquet(replica.table_dir(args.replica, args.table)).count()
     print(f"initdb: {args.table} bootstrapped with {n} rows")
     return 0
 
@@ -50,6 +48,13 @@ def cmd_syncdb(args) -> int:
     the manifest's ``os.replace`` — a crash before it leaves the prior
     manifest (old data, old token) fully intact, and the staged
     directories are reclaimed by vacuum on the next run.
+
+    Each table is one pass: the base is read with its declared schema,
+    the changeset is decoded and compacted once (both merge branches
+    share the result), and the merged rows are written once. The
+    malformed-record count and the printed row count are observed on
+    that write, so no other Spark job runs. A changeset with malformed
+    records is refused: exit 1 and the manifest is left untouched.
     """
     spark = session.get_spark(app="cda2-syncdb")
     root = args.replica
@@ -63,39 +68,49 @@ def cmd_syncdb(args) -> int:
     replica.vacuum(root)  # reclaim leftovers from any crashed prior sync
     man = replica.load(root)
     new_ver = man["version"] + 1
-    staged: dict[str, str] = {}
+    staged: dict[str, tuple[str, int]] = {}
     for table, changes_path, key in zip(tables, changes_list, keys):
-        base = spark.read.parquet(replica.table_dir(root, table))
-        changes = read_changeset_jsonl(
-            spark,
-            changes_path,
-            table=table,
-            key_cols=[key],
-            ts_col="_change_ts",
-            seq_col="_change_seq",
+        changes, rejects = observe_rejects(
+            read_changeset_jsonl(
+                spark,
+                changes_path,
+                table=table,
+                key_cols=[key],
+                ts_col="_change_ts",
+                seq_col="_change_seq",
+            ),
+            [key],
         )
         # Compact multi-change-per-PK batches to the latest by meta.ts
         # (file order as the tie-break) BEFORE applying — without this
         # a changeset touching one key twice produces duplicate-PK rows
         # and order-dependent results (M3).
         merged = apply_changeset(
-            base,
+            replica.read(spark, root, table),
             changes,
             keys=[key],
             compact_by=["_change_ts", "_change_seq"],
         )
         rel = f"{table}__v{new_ver}"
-        merged.write.mode("overwrite").parquet(os.path.join(root, rel))
-        staged[table] = rel
-    for table, rel in staged.items():
+        n = replica.write(merged, os.path.join(root, rel))
+        bad = rejects.get["rejected"]
+        if bad:
+            print(
+                f"syncdb: {table}: refused {bad} malformed change record(s) "
+                f"in {changes_path} (null key or meta.action not U/D); "
+                "nothing committed",
+                file=sys.stderr,
+            )
+            return 1
+        staged[table] = (rel, n)
+    for table, (rel, _) in staged.items():
         man["tables"][table] = {"dir": rel}
     man["version"] = new_ver
     if args.token is not None:
         man["token"] = args.token
     replica.commit(root, man)  # <- the all-tables-or-nothing point
     replica.vacuum(root)  # superseded versions are now unreferenced
-    for table in tables:
-        n = spark.read.parquet(replica.table_dir(root, table)).count()
+    for table, (_, n) in staged.items():
         print(f"syncdb: {table} now {n} rows after merge")
     return 0
 
@@ -190,21 +205,20 @@ def cmd_optimize(args) -> int:
 
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(path)
+    df = replica.read(spark, root, args.table)
     clustered = df.repartitionByRange(target, F.col(args.key)).sortWithinPartitions(
         args.key
     )
     man = replica.load(root)
     new_ver = man["version"] + 1
     rel = f"{args.table}__v{new_ver}"
-    clustered.write.mode("overwrite").parquet(os.path.join(root, rel))
+    n = replica.write(clustered, os.path.join(root, rel))
     man["tables"][args.table] = {"dir": rel}
     man["version"] = new_ver
     replica.commit(root, man)
     replica.vacuum(root)
     new_path = replica.table_dir(root, args.table)
     files_after = glob.glob(f"{new_path}/part-*")
-    n = spark.read.parquet(new_path).count()
     print(
         f"optimize: {args.table} rewrote {len(files_before)} files "
         f"({bytes_total >> 20} MiB) into {len(files_after)} "

@@ -32,7 +32,6 @@ def compact_changeset(
     changes: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[str],
-    action_col: str = "action",
 ) -> DataFrame:
     """Keep only the latest change per PK (M3).
 
@@ -40,12 +39,19 @@ def compact_changeset(
     ``meta.ts`` plus a unique tie-break); the lexicographically last
     row wins — matching the reference's apply-in-arrival-order
     semantics collapsed to its final state.
+
+    The result is a lazy local checkpoint: the first action that needs
+    it decodes, sorts and shuffles the changeset once, and every later
+    consumer (the merge's touched-key anti-join and its upsert union,
+    a sink's view delta) reads the materialised rows instead of
+    planning its own exchange over the raw input.
     """
     w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
     return (
         changes.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
+        .localCheckpoint(eager=False)
     )
 
 
@@ -65,20 +71,12 @@ def apply_changeset(
     carry exactly the changeset payload.
     """
     if compact_by is not None:
-        changes = compact_changeset(changes, keys, compact_by, action_col)
+        changes = compact_changeset(changes, keys, compact_by)
     payload_cols = [c for c in base.columns]
     touched_keys = changes.select(*keys)
     survivors = base.join(touched_keys, on=list(keys), how="left_anti")
     upserts = changes.where(F.col(action_col) == ACTION_UPSERT).select(*payload_cols)
     return survivors.unionByName(upserts)
-
-
-def snapshot_load(df: DataFrame, path: str, partition_by: Sequence[str] = ()) -> None:
-    """Full-table bootstrap (M2, ``initdb``): replace-all at rest."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
 
 
 def snapshot_load_bucketed(

@@ -52,21 +52,6 @@ def graded(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]
 # name list applied after all modules load (names NOT listed keep their
 # import-order position after the window).
 #
-# Round-11 window — the 19 NEW r11 operators (never sampled by
-# definition) and the FINAL 31 names never driver-sampled in r01–r10
-# (recomputed from the ten CORRECTNESS files: the 5 round-9 operators
-# the round-9 judge re-executed directly, the 8 first-wave r10
-# operators, and the 18 second-wave r10 operators). 19 new + 31
-# first-time = 50 exactly; after this round the driver union is
-# 349/349 with zero never-sampled names.
-#
-# Round-12 window — NEW r12 operators first (never sampled by
-# definition), then stream_rollup_replay (the single r01–r11 union
-# gap: added mid-r11 after that window was pinned; sampling it closes
-# the union at 350/350 of the r11 names), then the 19 oldest verdicts
-# (the r01/r02 names the r11 window displaced), then the head of the
-# r05 block — trimmed from the tail so the window stays exactly 50.
-#
 # Round-13 window — the 15 NEW r13 operators first (never sampled by
 # definition), then ALL 28 remaining r05-latest-verdict names
 # (recomputed from the CORRECTNESS_r01–r12 union — the r12 plan's "24"
@@ -138,198 +123,6 @@ _SAMPLE_WINDOW_R13: tuple[str, ...] = (
     "explode_array",
     "explode_outer_sparse",
     "scalar_array",
-)
-
-# Round-12 window (historical — superseded by _SAMPLE_WINDOW_R13).
-_SAMPLE_WINDOW_R12: tuple[str, ...] = (
-    # --- NEW r12 operators (prepended as they land) ---
-    "dedup_banding_grid_eval",
-    "stream_novelty_replay",
-    "stream_priority_sample_replay",
-    "search_bm25_param_grid",
-    "timeseries_theil_sen",
-    "pipeline_decontam_sweep",
-    "multimodal_phash_threshold_curve",
-    "stream_session_gap_sweep",
-    "validate_key_skew",
-    "graph_degree_powerlaw",
-    "analytics_fdr_bh",
-    "join_asof_tolerance_sweep",
-    "agg_quantile_sketch_sweep",
-    "layout_compaction_target_sweep",
-    "text_gopher_threshold_sweep",
-    # --- union closure (1) ---
-    "stream_rollup_replay",
-    # --- oldest verdicts: the 19 displaced r01/r02 names ---
-    "merge_upsert_apply",
-    "dedup_exact",
-    "jsonl_envelope_roundtrip",
-    "merge_incremental_agg",
-    "validate_snapshot_diff",
-    "merge_idempotent_reapply",
-    "source_python_datasource",
-    "merge_compaction",
-    "multimodal_binary_meta",
-    "join_inner_agg",
-    "join_broadcast_dim",
-    "join_left_outer",
-    "join_full_outer",
-    "join_semi",
-    "join_anti",
-    "join_range",
-    "join_five_way",
-    "join_salted_skew",
-    "join_null_safe",
-    # --- r05 refresh head (fills to 50; trimmed from the tail as new
-    # r12 operators are prepended) ---
-    "agg_count_distinct",
-    "agg_approx_distinct",
-    "agg_rollup",
-    "agg_cube",
-    "agg_collect_sorted",
-    "agg_approx_percentile",
-    "agg_string_concat",
-    "agg_grouping_sets",
-    "agg_histogram_equidepth",
-    "agg_mode_deterministic",
-    "agg_boolean",
-    "agg_robust_stats",
-    "agg_weighted_percentile",
-    "agg_median_distributed",
-    "agg_rollup_parent_share",
-)
-
-# Round-11 window (historical — superseded by _SAMPLE_WINDOW_R12).
-_SAMPLE_WINDOW_R11: tuple[str, ...] = (
-    # --- NEW r11 operators (sampled immediately; each one added here
-    # displaces the newest refresh slot so the window stays 50) ---
-    "stream_simhash_pairs_capped",
-    "analytics_diff_in_diff",
-    "analytics_ridge_regression",
-    "analytics_kaplan_meier",
-    "analytics_sprt_boundary",
-    "validate_k_anonymity",
-    "agg_theta_sketch_setops",
-    "sample_weighted_priority",
-    "graph_betweenness_seeds",
-    "dedup_threshold_sweep",
-    "search_ndcg_eval",
-    "vector_sq8_recall_eval",
-    "text_novelty_curve",
-    "pipeline_water_filling",
-    "join_scd2_pointintime",
-    "analytics_activity_streaks",
-    "vector_ivf_nprobe_curve",
-    "text_source_overlap_matrix",
-    "pipeline_stage_order_eval",
-    # --- 31 never-sampled (r01–r10 union gap; with the 19 new names
-    # above, the r01–r11 union closes at 349/349) ---
-    # round-9 operators the r9 judge re-ran directly (5)
-    "dedup_simhash_recall_eval",
-    "text_langid_eval",
-    "vector_bq_hamming_topk",
-    "vector_bq_recall_eval",
-    "analytics_chi_square",
-    # first-wave r10 (8)
-    "stream_simhash_pairs_replay",
-    "agg_quantile_sketch",
-    "sample_stratified_neyman",
-    "pipeline_rendezvous_resharding",
-    "validate_psi_drift",
-    "dedup_cluster_histogram",
-    "sample_coordinated_fk",
-    "dedup_simhash_cap_effect",
-    # second-wave r10 (18)
-    "join_bloom_prefilter",
-    "merge_deletion_vectors",
-    "merge_ivm_join_view",
-    "merge_equality_deletes",
-    "graph_pagerank_personalized",
-    "graph_closeness_seeds",
-    "graph_walk_corpus",
-    "analytics_ks_test",
-    "analytics_bootstrap_ci",
-    "analytics_permutation_test",
-    "analytics_mutual_information",
-    "analytics_dp_counts",
-    "analytics_welch_ttest",
-    "analytics_power_analysis",
-    "text_feature_hashing",
-    "validate_join_cardinality",
-    "validate_f2_ams_sketch",
-    "timeseries_dft_top",
-    # (dedup_exact, jsonl_envelope_roundtrip, merge_compaction,
-    # merge_idempotent_reapply, merge_incremental_agg,
-    # merge_upsert_apply, multimodal_binary_meta, source_python_datasource,
-    # validate_snapshot_diff, join_anti, join_broadcast_dim,
-    # join_five_way, join_full_outer, join_inner_agg, join_left_outer,
-    # join_null_safe, join_range, join_salted_skew, join_semi displaced
-    # by the nineteen new r11 operators — they keep their r01/r02
-    # verdicts and head the r12 refresh list.)
-)
-
-# Round-10 window (historical — superseded by _SAMPLE_WINDOW_R11): the
-# 49 first-time names of r10 + the join_interval_overlap stale-error
-# clear; landed 50/50 green in CORRECTNESS_r10.json (union 299/330).
-_SAMPLE_WINDOW_R10: tuple[str, ...] = (
-    # enrichment tail (6)
-    "pipeline_chunk_storage",
-    "text_rake_keyphrases",
-    "graph_hits",
-    "multimodal_shard_index",
-    "graph_clustering_coefficient",
-    "match_fellegi_sunter",
-    # streaming / timeseries (14)
-    "timeseries_downsample_ohlc",
-    "stream_session_capped",
-    "timeseries_changepoint",
-    "timeseries_seasonality",
-    "timeseries_acf",
-    "stream_cusum_flags",
-    "timeseries_gap_stats",
-    "timeseries_anomaly_iqr",
-    "timeseries_xcorr",
-    "timeseries_stl_lite",
-    "timeseries_snaive_backtest",
-    "timeseries_holt_forecast",
-    "stream_window_uniques_smoke",
-    "analytics_session_paths",
-    # merge tail (5)
-    "merge_bucketed_base",
-    "merge_tombstone_gc",
-    "merge_time_travel",
-    "merge_changeset_stats",
-    "merge_partition_overwrite",
-    # multimodal (5)
-    "multimodal_decode_frames",
-    "multimodal_decode_stats",
-    "multimodal_resize_stats",
-    "multimodal_storage_budget",
-    "multimodal_phash_dedup",
-    # sketches (2) + layout (1)
-    "agg_hll_deterministic",
-    "agg_kmv_jaccard",
-    "layout_skipping_eval",
-    # curation tail (14)
-    "vector_pq_codes",
-    "vector_pq_adc_topk",
-    "text_naive_bayes_quality",
-    "vector_prefix_dim_recall",
-    "pipeline_bpe_merges",
-    "pipeline_bpe_encode",
-    "pipeline_quality_funnel",
-    "text_bpe_fertility",
-    "pipeline_bpe_vocab_growth",
-    "pipeline_mix_temperature",
-    "analytics_calibration_ece",
-    "text_boilerplate_ngrams",
-    "text_kneser_ney_bigram",
-    "sample_coreset_kcenter",
-    # analytics (2)
-    "analytics_ab_cuped",
-    "analytics_cep_pattern",
-    # stale-error clear (1)
-    "join_interval_overlap",
 )
 
 

@@ -13,8 +13,11 @@ this module supplies the standard lakehouse-style substitute:
   ``os.replace`` — atomic on POSIX. A crash at ANY earlier point leaves
   the prior manifest (and the directories it references) untouched;
   the staged directories are garbage collected by :func:`vacuum`.
-- Readers resolve through :func:`table_dir`; replicas bootstrapped by
-  older layouts (no manifest) fall back to the plain ``{table}`` path.
+- Readers resolve through :func:`table_dir` (:func:`read` adds the
+  declared schema); replicas bootstrapped by older layouts (no
+  manifest) fall back to the plain ``{table}`` path.
+- Writers stage through :func:`write`, which returns the row count it
+  observed while writing, so no verb reads its output back to count it.
 
 Single-process by design (matching the reference's one-scheduler
 deployment); concurrent writers would need a lock file or a real table
@@ -26,6 +29,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
+
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+from . import schemas
 
 MANIFEST = "_manifest.json"
 
@@ -49,6 +56,23 @@ def table_dir(root: str, table: str) -> str:
     man = load(root)
     rel = man["tables"].get(table, {}).get("dir", table)
     return os.path.join(root, rel)
+
+
+def read(spark: SparkSession, root: str, table: str) -> DataFrame:
+    """A table's current data, read with its declared schema: no Spark
+    job infers the schema from a parquet footer."""
+    return spark.read.schema(schemas.TABLES[table]).parquet(table_dir(root, table))
+
+
+def write(df: DataFrame, path: str) -> int:
+    """Write ``df`` as parquet to ``path`` and return its row count,
+    observed while the write runs rather than by reading the files
+    back."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return obs.get["rows"]
 
 
 def commit(root: str, manifest: dict) -> None:

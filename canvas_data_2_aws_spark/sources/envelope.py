@@ -12,9 +12,10 @@ SURVEY §1.1), flattened to columns ready for the M1 merge
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..operators.merge import ACTION_DELETE, ACTION_UPSERT
 from ..schemas import TABLES
 
 
@@ -76,8 +77,8 @@ def decode_envelope(
     """Parse envelope JSONL into typed flat columns + ``action``.
 
     Strict schema application (S4): unknown fields are dropped, type
-    drift surfaces as nulls that the merge's compaction stage rejects —
-    the Spark analog of the reference regenerating DDL on a schema
+    drift surfaces as nulls (a null key is counted by
+    :func:`observe_rejects`) — the Spark analog of the reference regenerating DDL on a schema
     version bump.
 
     ``ts_col`` surfaces ``meta.ts`` under that name (aliased, never
@@ -113,15 +114,24 @@ def read_changeset_jsonl(
     form; the streaming twin is ``spark.readStream.text`` + the same
     ``decode_envelope``).
 
-    ``seq_col`` attaches a monotonically increasing id BEFORE the
-    decode — for text sources Spark's splits follow file offsets, so
-    the id is consistent with line order and serves as the in-file
-    tie-break when two changes to one PK share a ``meta.ts``.
+    ``seq_col`` attaches each record's position in declared file order
+    — ``(file path, split start, id within the split)`` — as the
+    tie-break when two changes to one PK share a ``meta.ts``: a later
+    part file wins, and within a file a later line wins. A bare
+    ``monotonically_increasing_id`` would follow Spark's split packing,
+    which orders splits by size, not by file.
     """
     records = spark.read.text(path)
     passthrough = []
     if seq_col is not None:
-        records = records.withColumn(seq_col, F.monotonically_increasing_id())
+        records = records.withColumn(
+            seq_col,
+            F.struct(
+                F.col("_metadata.file_path"),
+                F.col("_metadata.file_block_start"),
+                F.monotonically_increasing_id(),
+            ),
+        )
         passthrough = [seq_col]
     return decode_envelope(
         records,
@@ -131,3 +141,19 @@ def read_changeset_jsonl(
         ts_col=ts_col,
         passthrough=passthrough,
     )
+
+
+def observe_rejects(
+    changes: DataFrame, key_cols: list[str]
+) -> tuple[DataFrame, Observation]:
+    """Count malformed change records as a side effect of whatever
+    action next runs ``changes``: a record whose key decodes to null (a
+    truncated or non-JSON line parses to a null envelope) or whose
+    ``meta.action`` is neither ``U`` nor ``D``. Read the count from the
+    returned observation's ``rejected`` metric after that action; no
+    extra Spark job runs for it."""
+    bad = ~F.coalesce(F.col("action").isin(ACTION_UPSERT, ACTION_DELETE), F.lit(False))
+    for k in key_cols:
+        bad = bad | F.col(k).isNull()
+    obs = Observation()
+    return changes.observe(obs, F.count_if(bad).alias("rejected")), obs

@@ -18,8 +18,9 @@ import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from ..operators.merge import apply_changeset
+from ..operators.merge import apply_changeset, compact_changeset
 
 
 class StreamingMergeSink:
@@ -37,8 +38,26 @@ class StreamingMergeSink:
         self.table_dir = table_dir
         self.keys = list(keys)
         self.compact_by = list(compact_by)
+        # Schema of each directory kind ("v", "view_v"), taken from the
+        # last frame written or, after a restart, the first read: later
+        # reads pass it, so no batch runs a parquet footer-inference job.
+        self._schemas: dict[str, StructType] = {}
 
     # -- snapshot bookkeeping --------------------------------------------
+
+    def _read(self, kind: str, version: int) -> DataFrame:
+        reader = self.spark.read
+        if kind in self._schemas:
+            reader = reader.schema(self._schemas[kind])
+        df = reader.parquet(os.path.join(self.table_dir, f"{kind}{version}"))
+        self._schemas[kind] = df.schema
+        return df
+
+    def _write(self, df: DataFrame, kind: str, version: int) -> None:
+        df.write.mode("overwrite").parquet(
+            os.path.join(self.table_dir, f"{kind}{version}")
+        )
+        self._schemas[kind] = df.schema
 
     def _pointer(self) -> str:
         return os.path.join(self.table_dir, "_CURRENT")
@@ -54,11 +73,11 @@ class StreamingMergeSink:
         v = self.current_version()
         if v < 0:
             raise FileNotFoundError(f"no snapshot committed under {self.table_dir}")
-        return self.spark.read.parquet(os.path.join(self.table_dir, f"v{v}"))
+        return self._read("v", v)
 
     def bootstrap(self, base: DataFrame) -> None:
         """M2 snapshot load: commit version 0."""
-        base.write.mode("overwrite").parquet(os.path.join(self.table_dir, "v0"))
+        self._write(base, "v", 0)
         self._commit(0)
 
     def _commit(self, version: int) -> None:
@@ -68,15 +87,14 @@ class StreamingMergeSink:
     # -- the merge loop ----------------------------------------------------
 
     def apply_batch(self, changes: DataFrame, batch_id: int) -> None:
-        base = self.current_snapshot()
-        merged = apply_changeset(
-            base, changes, keys=self.keys, compact_by=self.compact_by
-        )
-        next_v = self.current_version() + 1
-        merged.write.mode("overwrite").parquet(
-            os.path.join(self.table_dir, f"v{next_v}")
-        )
-        self._commit(next_v)
+        compacted = compact_changeset(changes, self.keys, self.compact_by)
+        self._merge(self.current_snapshot(), compacted, self.current_version() + 1)
+
+    def _merge(self, base: DataFrame, compacted: DataFrame, version: int) -> None:
+        """Write ``base`` with the compacted changeset applied as
+        snapshot ``version`` and commit it."""
+        self._write(apply_changeset(base, compacted, keys=self.keys), "v", version)
+        self._commit(version)
 
     # Strict snapshot-dir pattern: a prefix match on 'v' would also
     # catch StreamingIVMSink's 'view_v{n}' directories and crash on
@@ -148,19 +166,16 @@ class StreamingIVMSink(StreamingMergeSink):
         )
 
     def current_view(self) -> DataFrame:
-        v = self.current_version()
-        return self.spark.read.parquet(os.path.join(self.table_dir, f"view_v{v}"))
+        return self._read("view_v", self.current_version())
 
     def bootstrap(self, base: DataFrame) -> None:
-        self._view_agg(base).write.mode("overwrite").parquet(
-            os.path.join(self.table_dir, "view_v0")
-        )
+        self._write(self._view_agg(base), "view_v", 0)
         super().bootstrap(base)
 
     def apply_batch(self, changes: DataFrame, batch_id: int) -> None:
+        """Compact the batch once; the view delta and the replica merge
+        both read that one compacted frame."""
         from pyspark.sql import functions as F
-
-        from ..operators.merge import compact_changeset
 
         base = self.current_snapshot()
         old_view = self.current_view()
@@ -171,7 +186,8 @@ class StreamingIVMSink(StreamingMergeSink):
             F.lit(1).cast("long").alias("n"),
             dec.alias("total"),
         )
-        touched = compacted.select(*self.keys).distinct()
+        # Compaction leaves one row per key, so the keys need no distinct.
+        touched = compacted.select(*self.keys)
         rems = base.join(touched, self.keys, "left_semi").select(
             self.view_group,
             F.lit(-1).cast("long").alias("n"),
@@ -185,12 +201,10 @@ class StreamingIVMSink(StreamingMergeSink):
             .where(F.col("n") > 0)
         )
         next_v = self.current_version() + 1
-        new_view.write.mode("overwrite").parquet(
-            os.path.join(self.table_dir, f"view_v{next_v}")
-        )
-        # Superclass merges the replica and commits next_v — the view
-        # written above becomes visible atomically with its snapshot.
-        super().apply_batch(changes, batch_id)
+        self._write(new_view, "view_v", next_v)
+        # The merge commits next_v — the view written above becomes
+        # visible atomically with its snapshot.
+        self._merge(base, compacted, next_v)
 
     _VIEW_RE = re.compile(r"view_v(\d+)")
 

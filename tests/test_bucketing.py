@@ -137,10 +137,15 @@ def test_merge_base_side_is_shuffle_free(spark, sf_dir, tmp_path):
         parent = lines[scan_idx - 1]
         assert re.search(r"Sort \[o_orderkey#\d+L ASC", parent), plan
         assert "Exchange" not in parent
-        # Exactly the two changeset-branch shuffles (compaction window
-        # in the anti-join branch + the upsert branch), nothing more.
+        # The changeset is compacted once, inside its checkpoint (the
+        # ExistingRDD scan); the only shuffle left in the plan moves the
+        # compacted keys to the anti-join, and it sits on that scan.
         n_exchanges = plan.count("Exchange hashpartitioning")
-        assert n_exchanges == 2, plan
+        assert n_exchanges == 1, plan
+        (ex_idx,) = [
+            i for i, l in enumerate(lines) if "Exchange hashpartitioning" in l
+        ]
+        assert "Scan ExistingRDD" in lines[ex_idx + 2], plan
         # semantics unchanged by the layout
         n_del = changes.where("action = 'D'").count()
         assert merged.count() == orders.count() - n_del

@@ -414,3 +414,139 @@ def test_cli_schema_compile_and_migrate(tmp_path, capsys):
     out = capsys.readouterr().out
     assert "+1 column(s) ['name']" in out
     assert "id BIGINT NOT NULL, name STRING" in out
+
+
+def _sql_job_ids(spark) -> set[int]:
+    """Ids of the jobs that ran inside a SQL execution (a query plan);
+    parquet footer schema inference runs outside any."""
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    ids: set[int] = set()
+    for i in range(executions.size()):
+        jobs = executions.apply(i).jobs().keys().iterator()
+        while jobs.hasNext():
+            ids.add(int(jobs.next()))
+    return ids
+
+
+def test_syncdb_one_pass_per_table(spark, sf_dir, tmp_path, capsys):
+    """A one-table syncdb runs one base read, one decode+compaction and
+    one write: no parquet schema-inference job and no re-read of the
+    committed table to count it. The printed row count comes from the
+    write and equals the committed table's row count."""
+    import re
+
+    replica = str(tmp_path / "guard_replica")
+    assert cli.main(
+        ["initdb", "--table", "orders", "--source-dir", sf_dir, "--replica", replica]
+    ) == 0
+    orders = load_table(spark, sf_dir, "orders")
+    changes = str(tmp_path / "guard_changes")
+    encode_envelope(derive_changeset(orders), key_cols=["o_orderkey"]).coalesce(
+        1
+    ).write.text(changes)
+    capsys.readouterr()
+
+    sc = spark.sparkContext
+    group = "test_syncdb_one_pass_per_table"
+    sc.setJobGroup(group, "one-table syncdb")
+    try:
+        rc = cli.main(["syncdb", "--table", "orders", "--changes", changes,
+                       "--key", "o_orderkey", "--replica", replica])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rc == 0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs and jobs <= _sql_job_ids(spark), "a job ran outside a query plan"
+    assert len(jobs) <= 3, sorted(jobs)
+
+    (printed,) = re.findall(r"syncdb: orders now (\d+) rows", capsys.readouterr().out)
+    committed = spark.read.parquet(replica_mod.table_dir(replica, "orders")).count()
+    assert int(printed) == committed
+
+
+def test_syncdb_ties_resolve_in_file_order(spark, sf_dir, tmp_path):
+    """Two changes to one key with the same meta.ts in different part
+    files: the later part wins, even though it is the larger file and
+    Spark packs larger splits first."""
+    import json
+
+    replica = str(tmp_path / "tie_replica")
+    assert cli.main(
+        ["initdb", "--table", "customer", "--source-dir", sf_dir,
+         "--replica", replica]
+    ) == 0
+    rows = [r.asDict() for r in spark.read.parquet(f"{replica}/customer")
+            .orderBy("c_custkey").collect()]
+    key = rows[0]["c_custkey"]
+
+    def upsert(row, name):
+        value = {c: v for c, v in row.items() if c != "c_custkey"}
+        value["c_name"] = name
+        return json.dumps({"key": {"c_custkey": row["c_custkey"]}, "value": value,
+                           "meta": {"action": "U", "ts": 5}})
+
+    changes = tmp_path / "tie_changes"
+    changes.mkdir()
+    (changes / "part-00000.jsonl").write_text(upsert(rows[0], "first") + "\n")
+    # part-00001 is the larger file: filler updates to other keys.
+    (changes / "part-00001.jsonl").write_text(
+        "\n".join([upsert(r, r["c_name"]) for r in rows[1:]]
+                  + [upsert(rows[0], "second")]) + "\n"
+    )
+    assert cli.main(["syncdb", "--table", "customer", "--changes", str(changes),
+                     "--key", "c_custkey", "--replica", replica]) == 0
+    merged = spark.read.parquet(replica_mod.table_dir(replica, "customer"))
+    (winner,) = merged.where(F.col("c_custkey") == key).collect()
+    assert winner.c_name == "second"
+    assert merged.count() == len(rows)
+
+
+def _refused_sync_leaves_manifest(sf_dir, tmp_path, bad_line):
+    """Sync a changeset holding one good delete and ``bad_line``; the
+    sync must exit non-zero and leave the manifest byte-identical."""
+    import json
+    import os
+
+    replica = str(tmp_path / "bad_replica")
+    for t in ("orders", "customer"):
+        assert cli.main(
+            ["initdb", "--table", t, "--source-dir", sf_dir, "--replica", replica]
+        ) == 0
+    good = _delete_changeset(tmp_path, "good.jsonl", "c_custkey", [1])
+    assert cli.main(["syncdb", "--table", "customer", "--changes", good,
+                     "--key", "c_custkey", "--replica", replica,
+                     "--token", "tok-1"]) == 0
+    manifest = os.path.join(replica, replica_mod.MANIFEST)
+    with open(manifest, "rb") as fh:
+        before = fh.read()
+
+    changes = tmp_path / "bad.jsonl"
+    delete = json.dumps({"key": {"o_orderkey": 1}, "meta": {"action": "D", "ts": 1}})
+    changes.write_text(delete + "\n" + bad_line + "\n")
+    rc = cli.main([
+        "syncdb", "--replica", replica, "--token", "tok-2",
+        "--table", "customer", "--changes", good, "--key", "c_custkey",
+        "--table", "orders", "--changes", str(changes), "--key", "o_orderkey",
+    ])
+    assert rc != 0
+    with open(manifest, "rb") as fh:
+        assert fh.read() == before
+
+
+def test_syncdb_refuses_truncated_record(spark, sf_dir, tmp_path, capsys):
+    _refused_sync_leaves_manifest(
+        sf_dir, tmp_path, '{"key": {"o_orderkey": 2}, "meta": {"action": "D", "t'
+    )
+    assert "refused 1 malformed" in capsys.readouterr().err
+
+
+def test_syncdb_refuses_unknown_action(spark, sf_dir, tmp_path, capsys):
+    import json
+
+    _refused_sync_leaves_manifest(
+        sf_dir, tmp_path,
+        json.dumps({"key": {"o_orderkey": 2}, "meta": {"action": "X", "ts": 1}}),
+    )
+    assert "refused 1 malformed" in capsys.readouterr().err
