@@ -26,30 +26,23 @@ from .sources.envelope import observe_rejects, read_changeset_jsonl
 def cmd_initdb(args) -> int:
     spark = session.get_spark(app="cda2-initdb")
     df = session.load_table(spark, args.source_dir, args.table)
-    n = replica.write(df, os.path.join(args.replica, args.table))
-    if replica.has_manifest(args.replica):
-        man = replica.load(args.replica)
-        man["tables"][args.table] = {"dir": args.table}
-        man["version"] += 1
-        replica.commit(args.replica, man)
-        replica.vacuum(args.replica)
-    print(f"initdb: {args.table} bootstrapped with {n} rows")
+    rows = replica.transact(args.replica, {args.table: (f"{args.table}__v", df)})
+    print(f"initdb: {args.table} bootstrapped with {rows[args.table]} rows")
     return 0
 
 
 def cmd_syncdb(args) -> int:
     """Apply one changeset per table, then advance ALL tables (and the
-    high-water token) in ONE atomic manifest commit.
+    high-water token) in ONE replica transaction.
 
     Mirrors the reference's all-tables-or-nothing Postgres transaction
-    around per-table token updates `[public: DAP]`: every merged table
-    is staged to a fresh ``{table}__v{N}`` directory first; nothing the
-    current manifest references is touched. The single commit point is
-    the manifest's ``os.replace`` — a crash before it leaves the prior
-    manifest (old data, old token) fully intact, and the staged
-    directories are reclaimed by vacuum on the next run.
+    around per-table token updates `[public: DAP]`: ``replica.transact``
+    stages every merged table to a fresh ``{table}__v{N}`` directory and
+    swaps the manifest only after all of them are written, so a crash
+    before the swap leaves the prior manifest (old data, old token)
+    fully intact.
 
-    Each table is one pass: the base is read with its declared schema,
+    Each table is one pass: the base is read with its recorded schema,
     the changeset is decoded and compacted once (both merge branches
     share the result), and the merged rows are written once. The
     malformed-record count and the printed row count are observed on
@@ -65,12 +58,13 @@ def cmd_syncdb(args) -> int:
             file=sys.stderr,
         )
         return 2
-    replica.vacuum(root)  # reclaim leftovers from any crashed prior sync
-    man = replica.load(root)
-    new_ver = man["version"] + 1
-    staged: dict[str, tuple[str, int]] = {}
+    frames, rejects = {}, []
     for table, changes_path, key in zip(tables, changes_list, keys):
-        changes, rejects = observe_rejects(
+        # Compact multi-change-per-PK batches to the latest by meta.ts
+        # (file order as the tie-break) BEFORE applying — without this
+        # a changeset touching one key twice produces duplicate-PK rows
+        # and order-dependent results (M3).
+        compacted, obs = observe_rejects(
             read_changeset_jsonl(
                 spark,
                 changes_path,
@@ -80,37 +74,17 @@ def cmd_syncdb(args) -> int:
                 seq_col="_change_seq",
             ),
             [key],
+            ["_change_ts", "_change_seq"],
         )
-        # Compact multi-change-per-PK batches to the latest by meta.ts
-        # (file order as the tie-break) BEFORE applying — without this
-        # a changeset touching one key twice produces duplicate-PK rows
-        # and order-dependent results (M3).
-        merged = apply_changeset(
-            replica.read(spark, root, table),
-            changes,
-            keys=[key],
-            compact_by=["_change_ts", "_change_seq"],
-        )
-        rel = f"{table}__v{new_ver}"
-        n = replica.write(merged, os.path.join(root, rel))
-        bad = rejects.get["rejected"]
-        if bad:
-            print(
-                f"syncdb: {table}: refused {bad} malformed change record(s) "
-                f"in {changes_path} (null key or meta.action not U/D); "
-                "nothing committed",
-                file=sys.stderr,
-            )
-            return 1
-        staged[table] = (rel, n)
-    for table, (rel, _) in staged.items():
-        man["tables"][table] = {"dir": rel}
-    man["version"] = new_ver
-    if args.token is not None:
-        man["token"] = args.token
-    replica.commit(root, man)  # <- the all-tables-or-nothing point
-    replica.vacuum(root)  # superseded versions are now unreferenced
-    for table, (_, n) in staged.items():
+        rejects.append(obs)
+        merged = apply_changeset(replica.read(spark, root, table), compacted, keys=[key])
+        frames[table] = (f"{table}__v", merged)
+    try:
+        rows = replica.transact(root, frames, token=args.token, rejects=rejects)
+    except replica.Rejected as exc:
+        print(f"syncdb: {exc}", file=sys.stderr)
+        return 1
+    for table, n in rows.items():
         print(f"syncdb: {table} now {n} rows after merge")
     return 0
 
@@ -189,15 +163,14 @@ def cmd_optimize(args) -> int:
     form of the graded compaction planner + Z-order layout ops).
     Clustering on the key keeps footer min/max selective, so post-
     compaction scans skip files on PK predicates. The rewrite commits
-    exactly like ``syncdb``: staged directory + atomic manifest
-    replace, so a crash mid-rewrite leaves the prior layout readable.
+    through the same replica transaction as ``syncdb``, so a crash
+    mid-rewrite leaves the prior layout readable.
     At 100 TB the same verb runs per partition off the manifest bins
     (`layout_compaction_bins`)."""
     import glob
 
     spark = session.get_spark(app="cda2-optimize")
     root = args.replica
-    replica.vacuum(root)
     path = replica.table_dir(root, args.table)
     files_before = glob.glob(f"{path}/part-*")
     bytes_total = sum(os.path.getsize(f) for f in files_before)
@@ -209,20 +182,12 @@ def cmd_optimize(args) -> int:
     clustered = df.repartitionByRange(target, F.col(args.key)).sortWithinPartitions(
         args.key
     )
-    man = replica.load(root)
-    new_ver = man["version"] + 1
-    rel = f"{args.table}__v{new_ver}"
-    n = replica.write(clustered, os.path.join(root, rel))
-    man["tables"][args.table] = {"dir": rel}
-    man["version"] = new_ver
-    replica.commit(root, man)
-    replica.vacuum(root)
-    new_path = replica.table_dir(root, args.table)
-    files_after = glob.glob(f"{new_path}/part-*")
+    rows = replica.transact(root, {args.table: (f"{args.table}__v", clustered)})
+    files_after = glob.glob(f"{replica.table_dir(root, args.table)}/part-*")
     print(
         f"optimize: {args.table} rewrote {len(files_before)} files "
         f"({bytes_total >> 20} MiB) into {len(files_after)} "
-        f"PK-clustered files, {n} rows"
+        f"PK-clustered files, {rows[args.table]} rows"
     )
     return 0
 

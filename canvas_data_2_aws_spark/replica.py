@@ -1,23 +1,27 @@
-"""Replica-root manifest: atomic multi-table commits for the sync CLI.
+"""Replica-root manifest: the one commit protocol of every replica writer.
 
 The reference pipeline commits each table's new high-water token in one
 Postgres transaction, so a crashed sync never leaves half the replica
 advanced `[public: DAP]`. Parquet directories have no transactions, so
-this module supplies the standard lakehouse-style substitute:
+this module supplies the standard lakehouse-style substitute, and every
+writer (``initdb``, ``syncdb``, ``optimize`` and the streaming sinks)
+commits through :func:`transact`:
 
-- ``_manifest.json`` at the replica root is the single source of truth
-  mapping table name -> current data directory (plus the sync token and
-  a monotonically increasing version).
-- Every mutation (syncdb, optimize) writes NEW directories
-  (``{table}__v{N}``), then swaps the manifest via write-temp +
-  ``os.replace`` — atomic on POSIX. A crash at ANY earlier point leaves
-  the prior manifest (and the directories it references) untouched;
-  the staged directories are garbage collected by :func:`vacuum`.
-- Readers resolve through :func:`table_dir` (:func:`read` adds the
-  declared schema); replicas bootstrapped by older layouts (no
-  manifest) fall back to the plain ``{table}`` path.
-- Writers stage through :func:`write`, which returns the row count it
-  observed while writing, so no verb reads its output back to count it.
+- ``_manifest.json`` at the replica root is the single source of truth.
+  It holds a monotonically increasing version, the sync token, the last
+  applied micro-batch id, and per entry its data directory and the
+  schema it was written with.
+- A transaction stages every frame into a NEW directory (the caller's
+  prefix plus the new version: ``orders__v7``, ``v7``, ``view_v7``),
+  refuses if a reject observation counted a malformed record, then
+  swaps the manifest via write-temp + fsync + ``os.replace``, which is
+  atomic on POSIX. A crash at ANY earlier point leaves the prior
+  manifest, and the directories it references, untouched.
+- After the swap, :func:`vacuum` reclaims every directory of a live
+  entry's prefix family that the manifest no longer references: the
+  superseded version and any staged leftover of a crashed transaction.
+- Readers resolve through :func:`table_dir`; :func:`read` adds the
+  recorded schema, so no Spark job infers it from a parquet footer.
 
 Single-process by design (matching the reference's one-scheduler
 deployment); concurrent writers would need a lock file or a real table
@@ -29,12 +33,17 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
-
-from . import schemas
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.json"
+_DIGITS = "0123456789"
+
+
+class Rejected(ValueError):
+    """A transaction's input held malformed records; nothing was committed."""
 
 
 def load(root: str) -> dict:
@@ -46,22 +55,19 @@ def load(root: str) -> dict:
     return {"version": 0, "token": None, "tables": {}}
 
 
-def has_manifest(root: str) -> bool:
-    return os.path.exists(os.path.join(root, MANIFEST))
-
-
 def table_dir(root: str, table: str) -> str:
-    """Resolve a table's current data directory through the manifest
-    (falling back to the plain ``{root}/{table}`` layout)."""
-    man = load(root)
-    rel = man["tables"].get(table, {}).get("dir", table)
-    return os.path.join(root, rel)
+    """A table's current data directory, resolved through the manifest."""
+    return os.path.join(root, load(root)["tables"][table]["dir"])
 
 
 def read(spark: SparkSession, root: str, table: str) -> DataFrame:
-    """A table's current data, read with its declared schema: no Spark
-    job infers the schema from a parquet footer."""
-    return spark.read.schema(schemas.TABLES[table]).parquet(table_dir(root, table))
+    """A table's current data, read with the schema it was written with
+    (an entry committed without one falls back to the parquet footer)."""
+    entry = load(root)["tables"][table]
+    reader = spark.read
+    if "schema" in entry:
+        reader = reader.schema(StructType.fromJson(entry["schema"]))
+    return reader.parquet(os.path.join(root, entry["dir"]))
 
 
 def write(df: DataFrame, path: str) -> int:
@@ -77,7 +83,7 @@ def write(df: DataFrame, path: str) -> int:
 
 def commit(root: str, manifest: dict) -> None:
     """Atomically replace the manifest: write a temp file, fsync, then
-    ``os.replace`` — the all-tables-or-nothing commit point."""
+    ``os.replace`` — the all-entries-or-nothing commit point."""
     os.makedirs(root, exist_ok=True)
     tmp = os.path.join(root, MANIFEST + ".tmp")
     with open(tmp, "w", encoding="utf-8") as fh:
@@ -87,27 +93,60 @@ def commit(root: str, manifest: dict) -> None:
     os.replace(tmp, os.path.join(root, MANIFEST))
 
 
-def vacuum(root: str) -> list[str]:
-    """Delete data directories not referenced by the current manifest —
-    staged leftovers from a crashed sync, or superseded versions whose
-    post-commit cleanup was interrupted. No-op without a manifest
-    (legacy plain layout has no bookkeeping to trust). Returns the
-    removed directory names."""
-    if not has_manifest(root):
-        return []
+def transact(
+    root: str,
+    frames: Mapping[str, tuple[str, DataFrame]],
+    *,
+    token: str | None = None,
+    batch_id: int | None = None,
+    rejects: Iterable[Observation] = (),
+) -> dict[str, int]:
+    """Commit ``frames`` (entry name -> (directory prefix, frame)) as the
+    replica's next version, all or nothing, and return each entry's row
+    count as observed on its write.
+
+    Every frame is staged to ``{prefix}{version}`` first. Each reject
+    observation (``sources.envelope.observe_rejects``) must have run as
+    part of those writes; if any counted a malformed record, raise
+    :class:`Rejected` before the commit. Entries not in ``frames`` keep
+    their directories; ``token`` and ``batch_id`` are recorded when
+    given. The superseded versions are vacuumed after the swap."""
     man = load(root)
-    live = {e["dir"] for e in man["tables"].values()}
+    version = man["version"] + 1
+    rows, staged = {}, {}
+    for name, (prefix, df) in frames.items():
+        rel = f"{prefix}{version}"
+        rows[name] = write(df, os.path.join(root, rel))
+        staged[name] = {"dir": rel, "schema": df.schema.jsonValue()}
+    bad = sum(obs.get["rejected"] for obs in rejects)
+    if bad:
+        raise Rejected(
+            f"refused {bad} malformed change record(s) (null key or action "
+            "not U/D); nothing committed"
+        )
+    man["tables"].update(staged)
+    man["version"] = version
+    if token is not None:
+        man["token"] = token
+    if batch_id is not None:
+        man["batch_id"] = batch_id
+    commit(root, man)
+    vacuum(root)
+    return rows
+
+
+def vacuum(root: str) -> list[str]:
+    """Delete the directories of each live entry's prefix family (its
+    ``dir`` without the version digits) that the manifest does not
+    reference: superseded versions, and staged leftovers of a crashed
+    transaction. Returns the removed directory names."""
+    live = {e["dir"] for e in load(root)["tables"].values()}
+    families = {d.rstrip(_DIGITS) for d in live if d[-1:].isdigit()}
     removed = []
-    for name in os.listdir(root):
+    for name in sorted(os.listdir(root)):
         full = os.path.join(root, name)
-        if not os.path.isdir(full):
-            continue
-        # Only reclaim names this module could have created: the plain
-        # table dir of a managed table, or any staged version of one.
-        stem = name.split("__v")[0]
-        if stem not in man["tables"]:
-            continue
-        if name not in live:
+        stem = name.rstrip(_DIGITS)
+        if stem != name and stem in families and name not in live and os.path.isdir(full):
             shutil.rmtree(full, ignore_errors=True)
             removed.append(name)
     return removed

@@ -12,10 +12,10 @@ SURVEY §1.1), flattened to columns ready for the M1 merge
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..operators.merge import ACTION_DELETE, ACTION_UPSERT
+from ..operators.merge import ACTION_DELETE, ACTION_UPSERT, compact_changeset
 from ..schemas import TABLES
 
 
@@ -144,16 +144,33 @@ def read_changeset_jsonl(
 
 
 def observe_rejects(
-    changes: DataFrame, key_cols: list[str]
+    changes: DataFrame, key_cols: list[str], order_by: list[str]
 ) -> tuple[DataFrame, Observation]:
-    """Count malformed change records as a side effect of whatever
-    action next runs ``changes``: a record whose key decodes to null (a
-    truncated or non-JSON line parses to a null envelope) or whose
+    """Compact ``changes`` (``operators.merge.compact_changeset``) and
+    count its malformed records as a side effect of whatever action
+    next runs the compacted frame: a record whose key decodes to null
+    (a truncated or non-JSON line parses to a null envelope) or whose
     ``meta.action`` is neither ``U`` nor ``D``. Read the count from the
     returned observation's ``rejected`` metric after that action; no
-    extra Spark job runs for it."""
+    extra Spark job runs for it.
+
+    The records are counted after compaction, above its lazy
+    checkpoint: an observation of the raw records would complete when
+    the checkpoint is created, before an input that needs no shuffle
+    has been read, and would report 0. So each record carries its key's
+    count of malformed records, and the one record compaction keeps
+    per key carries it past the checkpoint."""
     bad = ~F.coalesce(F.col("action").isin(ACTION_UPSERT, ACTION_DELETE), F.lit(False))
     for k in key_cols:
         bad = bad | F.col(k).isNull()
+    # The compaction window's spec, so both run in one Window operator.
+    whole_key = (
+        Window.partitionBy(*key_cols)
+        .orderBy(*[F.col(c).desc() for c in order_by])
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    flagged = changes.withColumn("_rejected", F.count_if(bad).over(whole_key))
+    compacted = compact_changeset(flagged, key_cols, order_by)
     obs = Observation()
-    return changes.observe(obs, F.count_if(bad).alias("rejected")), obs
+    total = F.coalesce(F.sum("_rejected"), F.lit(0)).alias("rejected")
+    return compacted.observe(obs, total), obs

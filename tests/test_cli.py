@@ -86,13 +86,12 @@ def test_validate_verb_detects_drift(spark, sf_dir, tmp_path):
     # Drift: drop some rows from the replica in place (stage-then-swap).
     import shutil
 
-    drifted = spark.read.parquet(f"{replica}/orders").where(
-        F.col("o_orderkey") % 5 != 0
-    )
+    live = replica_mod.table_dir(replica, "orders")
+    drifted = spark.read.parquet(live).where(F.col("o_orderkey") % 5 != 0)
     staging = str(tmp_path / "vstaging")
     drifted.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(f"{replica}/orders")
-    shutil.move(staging, f"{replica}/orders")
+    shutil.rmtree(live)
+    shutil.move(staging, live)
     assert cli.main(base_args) == 1
 
 
@@ -111,7 +110,7 @@ def test_syncdb_compacts_multi_change_per_pk(spark, sf_dir, tmp_path):
         )
         == 0
     )
-    base = spark.read.parquet(f"{replica}/orders")
+    base = spark.read.parquet(replica_mod.table_dir(replica, "orders"))
     k1, k2 = [r.o_orderkey for r in
               base.orderBy("o_orderkey").limit(2).collect()]
     row = base.where(F.col("o_orderkey") == k1).first().asDict()
@@ -172,14 +171,15 @@ def test_validate_detects_double_and_date_drift(spark, sf_dir, tmp_path):
     # matches read.parquet plans by path, so a later read of the
     # swapped-in corrupted files would silently serve pristine rows.
     backup = str(tmp_path / "ddbackup")
-    shutil.copytree(f"{replica}/orders", backup)
+    live = replica_mod.table_dir(replica, "orders")
+    shutil.copytree(live, backup)
 
     def swap(mutate):
         df = mutate(spark.read.parquet(backup))
         staging = str(tmp_path / "ddstaging")
         df.write.mode("overwrite").parquet(staging)
-        shutil.rmtree(f"{replica}/orders")
-        shutil.move(staging, f"{replica}/orders")
+        shutil.rmtree(live)
+        shutil.move(staging, live)
 
     # Corrupt a double column only — row count and PKs unchanged.
     swap(lambda df: df.withColumn(
@@ -208,16 +208,17 @@ def test_optimize_compacts_and_preserves_content(spark, sf_dir, tmp_path):
     )
     assert rc == 0
     # fragment the replica into many small files first
-    frag = spark.read.parquet(f"{replica}/orders").repartition(16)
+    live = replica_mod.table_dir(replica, "orders")
+    frag = spark.read.parquet(live).repartition(16)
     frag.write.mode("overwrite").parquet(f"{replica}/orders__staging")
     import shutil
 
-    shutil.rmtree(f"{replica}/orders")
-    shutil.move(f"{replica}/orders__staging", f"{replica}/orders")
-    before = spark.read.parquet(f"{replica}/orders")
+    shutil.rmtree(live)
+    shutil.move(f"{replica}/orders__staging", live)
+    before = spark.read.parquet(live)
     before_rows = before.count()
     before_sum = before.agg(F.sum("o_orderkey")).first()[0]
-    assert len(glob.glob(f"{replica}/orders/part-*")) >= 16
+    assert len(glob.glob(f"{live}/part-*")) >= 16
 
     rc = cli.main(
         [
@@ -257,13 +258,14 @@ def test_syncdb_multi_table_atomic_commit(spark, sf_dir, tmp_path):
             ["initdb", "--table", t, "--source-dir", sf_dir, "--replica", replica]
         ) == 0
     o_keys = [r.o_orderkey for r in
-              spark.read.parquet(f"{replica}/orders")
+              spark.read.parquet(replica_mod.table_dir(replica, "orders"))
               .orderBy("o_orderkey").limit(3).collect()]
     c_keys = [r.c_custkey for r in
-              spark.read.parquet(f"{replica}/customer")
+              spark.read.parquet(replica_mod.table_dir(replica, "customer"))
               .orderBy("c_custkey").limit(2).collect()]
-    o_before = spark.read.parquet(f"{replica}/orders").count()
-    c_before = spark.read.parquet(f"{replica}/customer").count()
+    o_before = spark.read.parquet(replica_mod.table_dir(replica, "orders")).count()
+    c_before = spark.read.parquet(replica_mod.table_dir(replica, "customer")).count()
+    version_before = replica_mod.load(replica)["version"]
 
     rc = cli.main([
         "syncdb", "--replica", replica, "--token", "tok-42",
@@ -278,16 +280,16 @@ def test_syncdb_multi_table_atomic_commit(spark, sf_dir, tmp_path):
 
     man = replica_mod.load(replica)
     assert man["token"] == "tok-42"
-    assert man["version"] == 1
+    assert man["version"] == version_before + 1
     o_now = spark.read.parquet(replica_mod.table_dir(replica, "orders"))
     c_now = spark.read.parquet(replica_mod.table_dir(replica, "customer"))
     assert o_now.count() == o_before - len(o_keys)
     assert c_now.count() == c_before - len(c_keys)
-    # superseded plain dirs were vacuumed after the commit
+    # the superseded initdb versions were vacuumed after the commit
     import os
 
-    assert not os.path.exists(f"{replica}/orders")
-    assert not os.path.exists(f"{replica}/customer")
+    dirs = {d for d in os.listdir(replica) if os.path.isdir(os.path.join(replica, d))}
+    assert dirs == {e["dir"] for e in man["tables"].values()}
 
 
 def test_syncdb_failed_midsync_leaves_prior_manifest(spark, sf_dir, tmp_path,
@@ -303,7 +305,7 @@ def test_syncdb_failed_midsync_leaves_prior_manifest(spark, sf_dir, tmp_path,
             ["initdb", "--table", t, "--source-dir", sf_dir, "--replica", replica]
         ) == 0
     o_keys = [r.o_orderkey for r in
-              spark.read.parquet(f"{replica}/orders")
+              spark.read.parquet(replica_mod.table_dir(replica, "orders"))
               .orderBy("o_orderkey").limit(2).collect()]
     ch = _delete_changeset(tmp_path, "ok.jsonl", "o_orderkey", o_keys)
 
@@ -348,7 +350,8 @@ def test_syncdb_failed_midsync_leaves_prior_manifest(spark, sf_dir, tmp_path,
 
     # Staged v2 leftovers exist now, and the next sync reclaims them
     # before re-staging (vacuum on entry), then commits cleanly.
-    leftovers = [d for d in os.listdir(replica) if d.endswith("__v2")]
+    staged = f"__v{man_before['version'] + 1}"
+    leftovers = [d for d in os.listdir(replica) if d.endswith(staged)]
     assert leftovers
     assert cli.main([
         "syncdb", "--replica", replica, "--token", "tok-2",
@@ -357,6 +360,51 @@ def test_syncdb_failed_midsync_leaves_prior_manifest(spark, sf_dir, tmp_path,
     assert replica_mod.load(replica)["token"] == "tok-2"
     assert spark.read.parquet(
         replica_mod.table_dir(replica, "customer")).count() == c_rows - len(c_keys)
+
+
+def test_initdb_failed_write_keeps_prior_version(spark, sf_dir, tmp_path,
+                                                 monkeypatch):
+    """A second initdb whose source raises mid-write must leave the
+    first initdb's rows readable and its manifest byte-identical; a
+    clean rerun converges and leaves no staged directory behind."""
+    import os
+
+    import pytest
+
+    replica = str(tmp_path / "init_crash")
+    argv = ["initdb", "--table", "orders", "--source-dir", sf_dir,
+            "--replica", replica]
+    assert cli.main(argv) == 0
+    manifest = os.path.join(replica, replica_mod.MANIFEST)
+    with open(manifest, "rb") as fh:
+        before = fh.read()
+    rows = spark.read.parquet(replica_mod.table_dir(replica, "orders")).count()
+
+    load_table = cli.session.load_table
+
+    def poisoned(spark, source_dir, table):
+        df = load_table(spark, source_dir, table)
+        # Data-dependent: the write has started before a row raises.
+        return df.withColumn("o_orderpriority", F.when(
+            F.col("o_orderkey") > 100, F.raise_error(F.lit("injected initdb crash"))
+        ).otherwise(F.col("o_orderpriority")))
+
+    monkeypatch.setattr(cli.session, "load_table", poisoned)
+    with pytest.raises(Exception, match="injected initdb crash"):
+        cli.main(argv)
+    monkeypatch.undo()
+
+    with open(manifest, "rb") as fh:
+        assert fh.read() == before
+    assert spark.read.parquet(
+        replica_mod.table_dir(replica, "orders")).count() == rows
+
+    assert cli.main(argv) == 0
+    man = replica_mod.load(replica)
+    dirs = {d for d in os.listdir(replica) if os.path.isdir(os.path.join(replica, d))}
+    assert dirs == {man["tables"]["orders"]["dir"]}
+    assert spark.read.parquet(
+        replica_mod.table_dir(replica, "orders")).count() == rows
 
 
 def test_syncdb_failed_staging_leaves_prior_manifest(spark, sf_dir, tmp_path):
@@ -370,10 +418,11 @@ def test_syncdb_failed_staging_leaves_prior_manifest(spark, sf_dir, tmp_path):
             ["initdb", "--table", t, "--source-dir", sf_dir, "--replica", replica]
         ) == 0
     o_keys = [r.o_orderkey for r in
-              spark.read.parquet(f"{replica}/orders")
+              spark.read.parquet(replica_mod.table_dir(replica, "orders"))
               .orderBy("o_orderkey").limit(2).collect()]
     ch = _delete_changeset(tmp_path, "s1.jsonl", "o_orderkey", o_keys)
-    o_before = spark.read.parquet(f"{replica}/orders").count()
+    man_before = replica_mod.load(replica)
+    o_before = spark.read.parquet(replica_mod.table_dir(replica, "orders")).count()
 
     with pytest.raises(Exception):
         cli.main([
@@ -384,8 +433,9 @@ def test_syncdb_failed_staging_leaves_prior_manifest(spark, sf_dir, tmp_path):
             "--key", "c_custkey",
         ])
 
-    # No manifest was ever committed; both tables read their originals.
-    assert not replica_mod.has_manifest(replica)
+    # The manifest initdb committed is untouched; both tables read
+    # their originals.
+    assert replica_mod.load(replica) == man_before
     assert spark.read.parquet(
         replica_mod.table_dir(replica, "orders")).count() == o_before
 
@@ -477,7 +527,7 @@ def test_syncdb_ties_resolve_in_file_order(spark, sf_dir, tmp_path):
         ["initdb", "--table", "customer", "--source-dir", sf_dir,
          "--replica", replica]
     ) == 0
-    rows = [r.asDict() for r in spark.read.parquet(f"{replica}/customer")
+    rows = [r.asDict() for r in spark.read.parquet(replica_mod.table_dir(replica, "customer"))
             .orderBy("c_custkey").collect()]
     key = rows[0]["c_custkey"]
 

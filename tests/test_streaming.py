@@ -3,10 +3,13 @@ of each streaming operator must equal its batch analog."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
-from canvas_data_2_aws_spark import registry
+from canvas_data_2_aws_spark import registry, replica
 
 registry.load_all()
 
@@ -142,10 +145,14 @@ def test_merge_sink_vacuum_keeps_current(spark, sf_dir, tmp_path):
     sink.bootstrap(orders)
     empty = orders.limit(0).withColumn("action", F.lit("U"))
     for b in range(3):
-        sink.apply_batch(empty, b)  # v1..v3
-    removed = sink.vacuum(keep_last=2)
-    assert removed == [0, 1]
-    assert sink.current_version() == 3
+        sink.apply_batch(empty, b)  # v2..v4, each reclaiming its predecessor
+    v = sink.current_version()
+    assert v == 4
+    # A staged leftover of a crashed batch is reclaimed; the live
+    # snapshot is all that remains, and it still reads.
+    shutil.copytree(f"{sink.table_dir}/v{v}", f"{sink.table_dir}/v{v + 1}")
+    assert sink.vacuum() == [f"v{v + 1}"]
+    assert sorted(os.listdir(sink.table_dir)) == [replica.MANIFEST, f"v{v}"]
     assert sink.current_snapshot().count() == 100
 
 
@@ -336,11 +343,9 @@ def test_streaming_ivm_view_equals_recompute(spark, sf_dir, tmp_path):
 
 
 def test_ivm_sink_vacuum_reclaims_views(spark, sf_dir, tmp_path):
-    """vacuum on an IVM table must not crash on view_v* dirs (r1
-    ADVICE: int('iew_v0') ValueError) and must age paired view
-    snapshots out with their table versions."""
-    import os
-
+    """vacuum on an IVM table must tell the ``v`` and ``view_v``
+    families apart (r1 ADVICE: int('iew_v0') ValueError) and must age
+    paired view snapshots out with their table versions."""
     from canvas_data_2_aws_spark.session import load_table
     from canvas_data_2_aws_spark.streaming.merge_sink import StreamingIVMSink
 
@@ -356,14 +361,101 @@ def test_ivm_sink_vacuum_reclaims_views(spark, sf_dir, tmp_path):
     sink.bootstrap(orders)
     empty = orders.limit(0).withColumn("action", F.lit("U"))
     for b in range(3):
-        sink.apply_batch(empty, b)  # v1..v3 + view_v1..view_v3
-    removed = sink.vacuum(keep_last=2)
-    assert removed == [0, 1]
-    names = set(os.listdir(sink.table_dir))
-    assert {"v2", "v3", "view_v2", "view_v3"} <= names
-    assert not ({"v0", "v1", "view_v0", "view_v1"} & names)
+        sink.apply_batch(empty, b)  # v2..v4 + view_v2..view_v4
+    v = sink.current_version()
+    assert v == 4
+    for kind in ("v", "view_v"):
+        shutil.copytree(f"{sink.table_dir}/{kind}{v}", f"{sink.table_dir}/{kind}{v + 1}")
+    assert sink.vacuum() == [f"v{v + 1}", f"view_v{v + 1}"]
+    assert sorted(os.listdir(sink.table_dir)) == [
+        replica.MANIFEST, f"v{v}", f"view_v{v}"
+    ]
     assert sink.current_snapshot().count() == 100
     assert sink.current_view().count() > 0
+
+
+def _strict_ivm_sink(spark, sf_dir, path):
+    """An IVM sink over 100 orders with one committed batch (id 0)."""
+    from canvas_data_2_aws_spark.session import load_table
+    from canvas_data_2_aws_spark.streaming.merge_sink import StreamingIVMSink
+
+    orders = load_table(spark, sf_dir, "orders").limit(100).localCheckpoint()
+    sink = StreamingIVMSink(
+        spark,
+        path,
+        keys=["o_orderkey"],
+        compact_by=["o_orderkey"],
+        view_group="o_orderstatus",
+        view_sum="o_totalprice",
+    )
+    sink.bootstrap(orders)
+    upserts = orders.limit(5).withColumn("o_orderstatus", F.lit("Z"))
+    sink.apply_batch(upserts.withColumn("action", F.lit("U")), 0)
+    return sink, orders
+
+
+def _committed(sink):
+    """The manifest bytes and the snapshot and view rows it commits."""
+    with open(os.path.join(sink.table_dir, replica.MANIFEST), "rb") as fh:
+        manifest = fh.read()
+    return (
+        manifest,
+        sorted(tuple(r) for r in sink.current_snapshot().collect()),
+        sorted(tuple(r) for r in sink.current_view().collect()),
+    )
+
+
+def test_sink_refuses_malformed_batches(spark, sf_dir, tmp_path):
+    """A micro-batch with a null key, or with an action other than U/D,
+    raises and commits nothing: the manifest stays byte-identical and
+    the snapshot and view read the previous version."""
+    sink, orders = _strict_ivm_sink(spark, sf_dir, str(tmp_path / "strict"))
+    before = _committed(sink)
+    deletes = orders.limit(3).withColumn("action", F.lit("D"))
+    first = deletes.agg(F.min("o_orderkey")).first()[0]
+    bad_rows = F.col("o_orderkey") == first
+    null_key = deletes.withColumn(
+        "o_orderkey", F.when(bad_rows, F.lit(None)).otherwise(F.col("o_orderkey"))
+    )
+    unknown_action = deletes.withColumn(
+        "action", F.when(bad_rows, F.lit("X")).otherwise(F.col("action"))
+    )
+    for batch_id, batch in enumerate([null_key, unknown_action], start=1):
+        with pytest.raises(replica.Rejected, match="refused 1 malformed"):
+            sink.apply_batch(batch, batch_id)
+        assert _committed(sink) == before
+
+
+def test_sink_crash_at_manifest_swap_keeps_prior_version(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A batch whose manifest ``os.replace`` dies leaves the previous
+    version current (snapshot and view); rerunning the batch commits
+    it and reclaims the staged directories."""
+    sink, orders = _strict_ivm_sink(spark, sf_dir, str(tmp_path / "swap"))
+    version = sink.current_version()
+    before = _committed(sink)
+    batch = orders.limit(3).withColumn("action", F.lit("D"))
+    real_replace = os.replace
+
+    def crash_on_manifest(src, dst):
+        if dst.endswith(replica.MANIFEST):
+            raise OSError("injected crash at the manifest swap")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(replica.os, "replace", crash_on_manifest)
+    with pytest.raises(OSError, match="injected crash"):
+        sink.apply_batch(batch, 1)
+    monkeypatch.undo()
+    assert sink.current_version() == version
+    assert _committed(sink) == before
+
+    sink.apply_batch(batch, 1)
+    assert sink.current_version() == version + 1
+    assert sink.current_snapshot().count() == 97
+    assert sorted(os.listdir(sink.table_dir)) == [
+        replica.MANIFEST, f"v{version + 1}", f"view_v{version + 1}"
+    ]
 
 
 def test_streaming_ohlc_equals_batch(spark, sf_dir):
@@ -520,14 +612,13 @@ def test_stream_window_uniques_within_sketch_error(spark, sf_dir):
 
 def test_merge_sink_crash_recovery_exactly_once(spark, sf_dir, tmp_path):
     """Fault injection at the merge sink's worst-case point: the crash
-    lands AFTER a micro-batch's snapshot version commits (the _CURRENT
-    pointer moved) but BEFORE the checkpoint records the batch as
-    complete. On restart Spark replays that batch against the
-    already-merged snapshot, so exactly-once through the sink rests on
-    the keyed merge being idempotent under replay — assert the final
-    snapshot equals the one-shot batch M1 apply, bit-for-bit and
-    PK-unique. (The python-source resume test covers offsets; this
-    covers the sink commit protocol.)"""
+    lands AFTER a micro-batch's snapshot version commits (the manifest
+    swapped) but BEFORE the checkpoint records the batch as complete.
+    On restart Spark replays that batch; the manifest's last applied
+    batch id makes the sink skip it, so the restart commits only the
+    next batch. Assert the final snapshot equals the one-shot batch M1
+    apply, bit-for-bit and PK-unique. (The python-source resume test
+    covers offsets; this covers the sink commit protocol.)"""
     from canvas_data_2_aws_spark.operators.merge import apply_changeset
     from canvas_data_2_aws_spark.queries.merge import derive_changeset
     from canvas_data_2_aws_spark.session import load_table
@@ -540,11 +631,12 @@ def test_merge_sink_crash_recovery_exactly_once(spark, sf_dir, tmp_path):
     base_dir = str(tmp_path / "replica")
     chg_dir = str(tmp_path / "chg")
     ckpt_dir = str(tmp_path / "ckpt")
-    # Key-disjoint thirds: sequential apply of the parts equals one
-    # apply of the whole, so the streamed replica can be compared to
-    # the batch M1 result directly.
+    # Key-disjoint thirds, one file each (one micro-batch each):
+    # sequential apply of the parts equals one apply of the whole, so
+    # the streamed replica can be compared to the batch M1 result
+    # directly.
     for i in range(3):
-        changeset.where(F.col("o_orderkey") % 3 == i).write.parquet(
+        changeset.where(F.col("o_orderkey") % 3 == i).coalesce(1).write.parquet(
             f"{chg_dir}/b{i}"
         )
 
@@ -574,10 +666,13 @@ def test_merge_sink_crash_recovery_exactly_once(spark, sf_dir, tmp_path):
         q.awaitTermination()
     assert crash_flag.exists()
     # The doomed batch's snapshot DID commit before the crash:
-    assert sink.current_version() >= 2  # v0 bootstrap, v1 batch0, v2 batch1
+    v_crash = sink.current_version()
+    assert v_crash == 3  # v1 bootstrap, v2 batch0, v3 batch1
 
     q2 = sink.start(stream(), ckpt_dir)
     q2.awaitTermination()
+    # the replayed batch 1 was skipped; only batch 2 committed
+    assert sink.current_version() == v_crash + 1
 
     expected = apply_changeset(
         orders, changeset, keys=["o_orderkey"], compact_by=["chg_ts"]
