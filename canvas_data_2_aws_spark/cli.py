@@ -19,8 +19,8 @@ import os
 import sys
 
 from . import registry, replica, session
-from .operators.merge import apply_changeset
-from .sources.envelope import observe_rejects, read_changeset_jsonl
+from .operators.merge import apply_changeset, observe_rejects
+from .sources.envelope import read_changeset_jsonl
 
 
 def cmd_initdb(args) -> int:
@@ -112,7 +112,7 @@ def cmd_validate(args) -> int:
     from pyspark.sql import functions as F
 
     spark = session.get_spark(app="cda2-validate")
-    replica_df = spark.read.parquet(replica.table_dir(args.replica, args.table))
+    replica_df = replica.read(spark, args.replica, args.table)
     reference = session.load_table(spark, args.source_dir, args.table)
     key = args.key
 

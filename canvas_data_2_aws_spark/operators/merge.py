@@ -15,17 +15,26 @@ At production scale the same semantics are one ``MERGE INTO`` on
 Iceberg/Delta; the plan below is what those engines execute underneath
 (minus their transactional commit). Both sides shuffle once on the PK;
 with the base bucketed by PK at rest (SCALE.md) only the (small)
-changeset shuffles.
+changeset shuffles. Malformed change records are counted over the
+compaction's own window (:func:`observe_rejects`), so a writer can
+refuse them without an extra job.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, WindowSpec, functions as F
 
 ACTION_UPSERT = "U"
 ACTION_DELETE = "D"
+
+
+def _latest_first(keys: Sequence[str], order_by: Sequence[str]) -> WindowSpec:
+    """The compaction window: each key's changes, latest first. Compaction
+    and :func:`observe_rejects` both use this one spec, so Spark evaluates
+    them in one Window operator."""
+    return Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
 
 
 def compact_changeset(
@@ -46,21 +55,48 @@ def compact_changeset(
     a sink's view delta) reads the materialised rows instead of
     planning its own exchange over the raw input.
     """
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
     return (
-        changes.withColumn("_rn", F.row_number().over(w))
+        changes.withColumn("_rn", F.row_number().over(_latest_first(keys, order_by)))
         .where(F.col("_rn") == 1)
         .drop("_rn")
         .localCheckpoint(eager=False)
     )
 
 
+def observe_rejects(
+    changes: DataFrame, keys: Sequence[str], order_by: Sequence[str]
+) -> tuple[DataFrame, Observation]:
+    """Compact ``changes`` (:func:`compact_changeset`) and count its
+    malformed records as a side effect of whatever action next runs the
+    compacted frame. A record is malformed when a key column is null (a
+    truncated or non-JSON line decodes to a null envelope) or its
+    ``action`` is neither ``U`` nor ``D``. Read the count from the
+    returned observation's ``rejected`` metric after that action; no
+    extra Spark job runs for it. A writer that finds it non-zero refuses
+    the commit (``replica.transact``).
+
+    The records are counted after compaction, above its lazy
+    checkpoint: an observation of the raw records would complete when
+    the checkpoint is created, before an input that needs no shuffle
+    has been read, and would report 0. So each record carries its key's
+    count of malformed records, and the one record compaction keeps
+    per key carries it past the checkpoint."""
+    bad = ~F.coalesce(F.col("action").isin(ACTION_UPSERT, ACTION_DELETE), F.lit(False))
+    for k in keys:
+        bad = bad | F.col(k).isNull()
+    whole_key = _latest_first(keys, order_by).rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    flagged = changes.withColumn("_rejected", F.count_if(bad).over(whole_key))
+    obs = Observation()
+    total = F.coalesce(F.sum("_rejected"), F.lit(0)).alias("rejected")
+    return compact_changeset(flagged, keys, order_by).observe(obs, total), obs
+
+
 def apply_changeset(
     base: DataFrame,
     changes: DataFrame,
     keys: Sequence[str],
-    action_col: str = "action",
-    compact_by: Sequence[str] | None = None,
 ) -> DataFrame:
     """Apply a compacted changeset to a base table (M1).
 
@@ -69,13 +105,18 @@ def apply_changeset(
     upsert payload is unioned back in. Result invariants (property-
     tested): PK-unique if base was; deleted keys absent; updated keys
     carry exactly the changeset payload.
+
+    Both frames must belong to one SparkSession: an observation on
+    the merged frame (:func:`observe_rejects`) completes only in the
+    session that runs it, so a mixed plan would leave its reader
+    waiting forever. A mix raises :class:`ValueError`.
     """
-    if compact_by is not None:
-        changes = compact_changeset(changes, keys, compact_by)
-    payload_cols = [c for c in base.columns]
-    touched_keys = changes.select(*keys)
-    survivors = base.join(touched_keys, on=list(keys), how="left_anti")
-    upserts = changes.where(F.col(action_col) == ACTION_UPSERT).select(*payload_cols)
+    if not base.sparkSession._jsparkSession.equals(changes.sparkSession._jsparkSession):
+        raise ValueError(
+            "apply_changeset: base and changes belong to different SparkSessions"
+        )
+    survivors = base.join(changes.select(*keys), on=list(keys), how="left_anti")
+    upserts = changes.where(F.col("action") == ACTION_UPSERT).select(*base.columns)
     return survivors.unionByName(upserts)
 
 

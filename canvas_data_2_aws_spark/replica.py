@@ -43,7 +43,9 @@ _DIGITS = "0123456789"
 
 
 class Rejected(ValueError):
-    """A transaction's input held malformed records; nothing was committed."""
+    """A transaction's input held malformed records (as
+    ``operators.merge.observe_rejects`` defines them); nothing was
+    committed."""
 
 
 def load(root: str) -> dict:
@@ -106,7 +108,7 @@ def transact(
     count as observed on its write.
 
     Every frame is staged to ``{prefix}{version}`` first. Each reject
-    observation (``sources.envelope.observe_rejects``) must have run as
+    observation (``operators.merge.observe_rejects``) must have run as
     part of those writes; if any counted a malformed record, raise
     :class:`Rejected` before the commit. Entries not in ``frames`` keep
     their directories; ``token`` and ``batch_id`` are recorded when
@@ -120,10 +122,7 @@ def transact(
         staged[name] = {"dir": rel, "schema": df.schema.jsonValue()}
     bad = sum(obs.get["rejected"] for obs in rejects)
     if bad:
-        raise Rejected(
-            f"refused {bad} malformed change record(s) (null key or action "
-            "not U/D); nothing committed"
-        )
+        raise Rejected(f"refused {bad} malformed change record(s); nothing committed")
     man["tables"].update(staged)
     man["version"] = version
     if token is not None:

@@ -153,26 +153,3 @@ PRIMARY_KEYS: dict[str, tuple[str, ...]] = {
     "documents": ("doc_id",),
     "embeddings": ("vec_id",),
 }
-
-
-def cd2_envelope(key_fields: T.StructType, value_fields: T.StructType) -> T.StructType:
-    """CD2 incremental-record envelope: {key, value, meta} (SURVEY §1.1).
-
-    ``meta.action`` ∈ {'U','D'} encodes upsert vs delete tombstone;
-    ``meta.ts`` orders multiple changes to one PK within a batch.
-    """
-    return T.StructType(
-        [
-            T.StructField("key", key_fields),
-            T.StructField("value", value_fields),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("action", T.StringType()),
-                        T.StructField("ts", T.TimestampType()),
-                    ]
-                ),
-            ),
-        ]
-    )

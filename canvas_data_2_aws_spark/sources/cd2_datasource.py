@@ -42,20 +42,16 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..schemas import TABLES
+from .envelope import envelope_schema
 
 
 def flattened_schema(table: str, key_cols: list[str]) -> StructType:
-    """key cols first, then value cols, then the action flag."""
-    base = TABLES[table]
-    key_fields = [f for f in base.fields if f.name in key_cols]
-    val_fields = [
-        StructField(f.name, f.dataType, True)
-        for f in base.fields
-        if f.name not in key_cols
-    ]
+    """key cols first, then value cols (nullable: a delete tombstone
+    carries none), then the action flag."""
+    env = envelope_schema(table, key_cols)
+    values = [StructField(f.name, f.dataType, True) for f in env["value"].dataType]
     return StructType(
-        key_fields + val_fields + [StructField("action", StringType(), False)]
+        [*env["key"].dataType, *values, StructField("action", StringType(), False)]
     )
 
 
@@ -100,56 +96,38 @@ class CD2EnvelopeReader(DataSourceReader):
         self._path = options["path"]
         self._schema = schema
         self._key_cols = options["keys"].split(",")
-        self._permissive = options.get("mode", "strict").lower() == "permissive"
 
     def partitions(self):
-        pattern = self._path
-        if not any(ch in pattern for ch in "*?["):
-            pattern = pattern.rstrip("/") + "/*"
-        files = sorted(f for f in glob.glob(pattern) if not f.endswith("_SUCCESS"))
         # One part-file = one partition = one decode task (header note).
-        return [InputPartition(f) for f in files] or [InputPartition(None)]
+        parts = [InputPartition(f) for f in _list_parts(self._path)]
+        return parts or [InputPartition(None)]
 
     def read(self, partition):
         if partition.value is None:
             return
-        yield from _parse_file(
-            partition.value, self._schema, self._key_cols, self._permissive
-        )
+        yield from _parse_file(partition.value, self._schema, self._key_cols)
 
 
-def _parse_file(
-    path: str, schema: StructType, key_cols: list[str], permissive: bool = False
-):
-    """Decode one JSONL part-file into flattened typed tuples.
-
-    ``permissive`` skips undecodable lines (malformed JSON, missing
-    meta/action, unconvertible values) instead of failing the task —
-    the landing-zone reality where one corrupt record must not sink a
-    sync; strict mode (default) fails fast like the S4 schema gate.
-    """
+def _parse_file(path: str, schema: StructType, key_cols: list[str]):
+    """Decode one JSONL part-file into flattened typed tuples. An
+    undecodable line (malformed JSON, missing meta/action, a value that
+    does not convert) fails the task, like the S4 schema gate."""
     fields = schema.fields[:-1]  # all but the action flag
     with open(path, encoding="utf-8") as fh:
         for line in fh:
             line = line.strip()
             if not line:
                 continue
-            try:
-                rec = json.loads(line)
-                key = rec.get("key") or {}
-                val = rec.get("value") or {}
-                yield tuple(
-                    _convert(
-                        key.get(f.name)
-                        if f.name in key_cols
-                        else val.get(f.name),
-                        f.dataType,
-                    )
-                    for f in fields
-                ) + (rec["meta"]["action"],)
-            except (ValueError, KeyError, TypeError):
-                if not permissive:
-                    raise
+            rec = json.loads(line)
+            key = rec.get("key") or {}
+            val = rec.get("value") or {}
+            yield tuple(
+                _convert(
+                    key.get(f.name) if f.name in key_cols else val.get(f.name),
+                    f.dataType,
+                )
+                for f in fields
+            ) + (rec["meta"]["action"],)
 
 
 def _list_parts(path: str) -> list[str]:

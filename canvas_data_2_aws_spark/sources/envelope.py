@@ -12,10 +12,9 @@ SURVEY §1.1), flattened to columns ready for the M1 merge
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..operators.merge import ACTION_DELETE, ACTION_UPSERT, compact_changeset
 from ..schemas import TABLES
 
 
@@ -43,23 +42,19 @@ def envelope_schema(table: str, key_cols: list[str]) -> StructType:
     )
 
 
-def encode_envelope(
-    df: DataFrame, key_cols: list[str], action_col: str = "action", ts=None
-) -> DataFrame:
-    """Serialize typed rows into envelope JSONL strings (the inverse
-    codec — used to publish a changeset and to round-trip-test the
-    parser without fixture change files)."""
-    data_cols = [c for c in df.columns if c != action_col]
+def encode_envelope(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Serialize typed rows plus their ``action`` into envelope JSONL
+    strings (the inverse codec — used to publish a changeset and to
+    round-trip-test the parser without fixture change files). Every
+    record carries ``meta.ts`` 0."""
+    data_cols = [c for c in df.columns if c != "action"]
     key = F.struct(*[F.col(c) for c in key_cols])
     # Deletes are key-only tombstones on the wire (the value block is
     # absent); to_json drops the null struct, from_json restores nulls.
-    value = F.when(F.col(action_col) == "D", F.lit(None)).otherwise(
+    value = F.when(F.col("action") == "D", F.lit(None)).otherwise(
         F.struct(*[F.col(c) for c in data_cols if c not in key_cols])
     )
-    meta = F.struct(
-        F.col(action_col).alias("action"),
-        (F.lit(ts) if ts is not None else F.lit(0)).cast("long").alias("ts"),
-    )
+    meta = F.struct(F.col("action"), F.lit(0).cast("long").alias("ts"))
     return df.select(
         F.to_json(F.struct(key.alias("key"), value.alias("value"), meta.alias("meta")))
         .alias("record")
@@ -76,10 +71,11 @@ def decode_envelope(
 ) -> DataFrame:
     """Parse envelope JSONL into typed flat columns + ``action``.
 
-    Strict schema application (S4): unknown fields are dropped, type
-    drift surfaces as nulls (a null key is counted by
-    :func:`observe_rejects`) — the Spark analog of the reference regenerating DDL on a schema
-    version bump.
+    Value-type drift and unknown fields are not refused yet (ROADMAP.md,
+    "Refuse schema drift"): ``from_json`` turns a value that does not
+    parse as its declared type into null and drops a field the schema
+    does not declare. A line that does not parse at all decodes to a
+    null key, which ``operators.merge.observe_rejects`` counts.
 
     ``ts_col`` surfaces ``meta.ts`` under that name (aliased, never
     bare ``ts`` — value blocks may carry their own ``ts`` column) so
@@ -89,17 +85,10 @@ def decode_envelope(
     """
     schema = envelope_schema(table, key_cols)
     extra = list(passthrough or [])
-    parsed = records.select(
-        *[F.col(c) for c in extra],
-        F.from_json(F.col(record_col), schema).alias("env"),
-    )
-    cols = ["env.key.*", "env.value.*", "env.meta.action"]
-    out = parsed.select(*cols, *extra)
-    if ts_col is not None:
-        out = parsed.select(
-            *cols, F.col("env.meta.ts").alias(ts_col), *extra
-        )
-    return out
+    ts = [] if ts_col is None else [F.col("env.meta.ts").alias(ts_col)]
+    return records.select(
+        *extra, F.from_json(F.col(record_col), schema).alias("env")
+    ).select("env.key.*", "env.value.*", "env.meta.action", *ts, *extra)
 
 
 def read_changeset_jsonl(
@@ -141,36 +130,3 @@ def read_changeset_jsonl(
         ts_col=ts_col,
         passthrough=passthrough,
     )
-
-
-def observe_rejects(
-    changes: DataFrame, key_cols: list[str], order_by: list[str]
-) -> tuple[DataFrame, Observation]:
-    """Compact ``changes`` (``operators.merge.compact_changeset``) and
-    count its malformed records as a side effect of whatever action
-    next runs the compacted frame: a record whose key decodes to null
-    (a truncated or non-JSON line parses to a null envelope) or whose
-    ``meta.action`` is neither ``U`` nor ``D``. Read the count from the
-    returned observation's ``rejected`` metric after that action; no
-    extra Spark job runs for it.
-
-    The records are counted after compaction, above its lazy
-    checkpoint: an observation of the raw records would complete when
-    the checkpoint is created, before an input that needs no shuffle
-    has been read, and would report 0. So each record carries its key's
-    count of malformed records, and the one record compaction keeps
-    per key carries it past the checkpoint."""
-    bad = ~F.coalesce(F.col("action").isin(ACTION_UPSERT, ACTION_DELETE), F.lit(False))
-    for k in key_cols:
-        bad = bad | F.col(k).isNull()
-    # The compaction window's spec, so both run in one Window operator.
-    whole_key = (
-        Window.partitionBy(*key_cols)
-        .orderBy(*[F.col(c).desc() for c in order_by])
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    flagged = changes.withColumn("_rejected", F.count_if(bad).over(whole_key))
-    compacted = compact_changeset(flagged, key_cols, order_by)
-    obs = Observation()
-    total = F.coalesce(F.sum("_rejected"), F.lit(0)).alias("rejected")
-    return compacted.observe(obs, total), obs

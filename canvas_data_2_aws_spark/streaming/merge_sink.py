@@ -21,8 +21,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import replica
-from ..operators.merge import apply_changeset
-from ..sources.envelope import observe_rejects
+from ..operators.merge import apply_changeset, observe_rejects
 
 
 class StreamingMergeSink:

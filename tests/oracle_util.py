@@ -1,38 +1,13 @@
 """Differential-comparison helpers shared by unit tests.
 
 Mirrors the driver's t2 gate: row count, column-name set, and
-order-insensitive canonical value equality (floats bit-exact).
+order-insensitive canonical value equality (floats bit-exact), with the
+canonicaliser of ``tools/check_oracle.py``.
 """
 
 from __future__ import annotations
 
-import datetime as dt
-import math
-
-
-def canon_cell(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else float.hex(v)
-    if isinstance(v, bool):
-        return f"bool:{v}"
-    if isinstance(v, dt.datetime):
-        return "ts:" + v.replace(tzinfo=None).isoformat(timespec="microseconds")
-    if isinstance(v, dt.date):
-        return "date:" + v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon_cell(x) for x in v) + "]"
-    if isinstance(v, bytes):
-        return "bytes:" + v.hex()
-    return f"{type(v).__name__}:{v}"
-
-
-def canon_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(canon_cell(r[i]) for i in order) for r in rows]
-    out.sort()
-    return out
+from tools.check_oracle import canon_rows
 
 
 def assert_matches_oracle(sdf, duck_con, oracle_sql: str):

@@ -94,6 +94,7 @@ def test_merge_base_side_is_shuffle_free(spark, sf_dir, tmp_path):
 
     from canvas_data_2_aws_spark.operators.merge import (
         apply_changeset,
+        compact_changeset,
         snapshot_load_bucketed,
     )
 
@@ -118,7 +119,8 @@ def test_merge_base_side_is_shuffle_free(spark, sf_dir, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         merged = apply_changeset(
-            base, changes, keys=["o_orderkey"], compact_by=["chg_ts"]
+            base, compact_changeset(changes, ["o_orderkey"], ["chg_ts"]),
+            keys=["o_orderkey"],
         )
         import re
 

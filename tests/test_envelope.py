@@ -152,30 +152,27 @@ def test_streaming_python_source_resumes_from_checkpoint(spark, sf_dir):
     assert total == expected
 
 
-def test_python_datasource_permissive_skips_malformed(spark, tmp_path):
-    """mode=permissive skips corrupt lines; strict mode fails the read."""
+def test_python_datasource_fails_on_malformed(spark, tmp_path):
+    """A corrupt line among good ones fails the read: the source never
+    skips a record."""
     import pytest
 
     from canvas_data_2_aws_spark.sources.cd2_datasource import register
 
     good = '{"key": {"o_orderkey": %d}, "value": {"o_custkey": 7, "o_orderstatus": "O", "o_totalprice": 1.5, "o_orderdate": "1995-01-01 00:00:00", "o_orderpriority": "1-URGENT"}, "meta": {"action": "U", "ts": 0}}'
-    lines = [good % 1, "{not json at all", good % 2, '{"key": {}, "value": {}}']
-    part = tmp_path / "parts"
-    part.mkdir()
-    (part / "p0.txt").write_text("\n".join(lines) + "\n")
     register(spark)
-
-    def reader(mode):
-        return (
-            spark.read.format("cd2_envelope")
-            .option("path", f"{part}/*.txt")
-            .option("table", "orders")
-            .option("keys", "o_orderkey")
-            .option("mode", mode)
-            .load()
-        )
-
-    rows = reader("permissive").collect()
-    assert sorted(r.o_orderkey for r in rows) == [1, 2]
-    with pytest.raises(Exception):
-        reader("strict").collect()
+    for i, (bad, error) in enumerate(
+        [("{not json at all", "JSONDecodeError"), ('{"key": {}, "value": {}}', "KeyError")]
+    ):
+        part = tmp_path / f"parts{i}"
+        part.mkdir()
+        (part / "p0.txt").write_text("\n".join([good % 1, bad, good % 2]) + "\n")
+        with pytest.raises(Exception, match=error):
+            (
+                spark.read.format("cd2_envelope")
+                .option("path", f"{part}/*.txt")
+                .option("table", "orders")
+                .option("keys", "o_orderkey")
+                .load()
+                .collect()
+            )

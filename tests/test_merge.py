@@ -1,7 +1,9 @@
 """Property-based tests for the incremental merge (SURVEY §5.4).
 
-Invariants under random changesets:
-- PK uniqueness is preserved;
+Invariants under random changesets, through the production path
+(``observe_rejects`` + ``apply_changeset``):
+- every malformed record (null key, action other than U/D) is counted;
+- with none, PK uniqueness is preserved;
 - deleted keys are absent;
 - updated keys carry exactly the latest (by meta ts) payload;
 - untouched keys pass through unchanged;
@@ -10,10 +12,15 @@ Invariants under random changesets:
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from canvas_data_2_aws_spark.operators.merge import apply_changeset, compact_changeset
+from canvas_data_2_aws_spark.operators.merge import (
+    apply_changeset,
+    compact_changeset,
+    observe_rejects,
+)
 
 BASE_SCHEMA = "pk LONG, val STRING"
 CHANGE_SCHEMA = "pk LONG, val STRING, action STRING, ts LONG"
@@ -22,7 +29,7 @@ CHANGE_SCHEMA = "pk LONG, val STRING, action STRING, ts LONG"
 def change_strategy():
     return st.lists(
         st.tuples(
-            st.integers(0, 15),               # pk
+            st.integers(0, 11),               # pk: base holds 0..9
             st.text("abc", min_size=1, max_size=3),  # val
             st.sampled_from(["U", "D"]),
             st.integers(0, 50),               # ts
@@ -32,25 +39,47 @@ def change_strategy():
     )
 
 
+def odd_strategy():
+    """None, or a few records on a null key or a shared key, with any
+    action: a null key or an action other than U/D makes a record
+    malformed."""
+    records = st.lists(
+        st.tuples(
+            st.sampled_from([None, 3]),
+            st.just("odd"),
+            st.sampled_from(["U", "D", "X"]),
+            st.integers(0, 50),
+        ),
+        min_size=1,
+        max_size=3,
+    )
+    return st.one_of(st.just([]), records)
+
+
 @settings(
-    max_examples=12,
+    max_examples=30,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-@given(changes=change_strategy())
-def test_merge_invariants(spark, changes):
+@given(changes=change_strategy(), odd=odd_strategy())
+def test_merge_invariants(spark, changes, odd):
     base_rows = [(i, f"base{i}") for i in range(10)]
     base = spark.createDataFrame(base_rows, BASE_SCHEMA)
     # unique (pk, ts) so "latest" is well-defined; tie-break by ts only
     seen = set()
     rows = []
-    for pk, val, action, ts in changes:
+    for pk, val, action, ts in changes + odd:
         if (pk, ts) not in seen:
             seen.add((pk, ts))
             rows.append((pk, val, action, ts))
-    chg = spark.createDataFrame(rows, CHANGE_SCHEMA) if rows else spark.createDataFrame([], CHANGE_SCHEMA)
+    chg = spark.createDataFrame(rows, CHANGE_SCHEMA)
 
-    merged = apply_changeset(base, chg, keys=["pk"], compact_by=["ts"]).collect()
+    compacted, obs = observe_rejects(chg, ["pk"], ["ts"])
+    merged = apply_changeset(base, compacted, keys=["pk"]).collect()
+    malformed = [r for r in rows if r[0] is None or r[2] not in ("U", "D")]
+    assert obs.get["rejected"] == len(malformed)
+    if malformed:
+        return  # a writer refuses this changeset; there is no state to check
 
     latest: dict[int, tuple] = {}
     for pk, val, action, ts in rows:
@@ -71,6 +100,17 @@ def test_merge_invariants(spark, changes):
     assert got == expected
 
 
+def test_apply_changeset_refuses_mixed_sessions(spark):
+    """A base and a changeset of two SparkSessions would leave an
+    observation on the merged frame waiting forever; the merge refuses
+    to plan them."""
+    base = spark.createDataFrame([(1, "b1")], BASE_SCHEMA)
+    other = spark.newSession().createDataFrame([(1, "new", "U", 1)], CHANGE_SCHEMA)
+    compacted, _ = observe_rejects(other, ["pk"], ["ts"])
+    with pytest.raises(ValueError, match="different SparkSessions"):
+        apply_changeset(base, compacted, keys=["pk"])
+
+
 def test_compaction_latest_wins(spark):
     chg = spark.createDataFrame(
         [(1, "old", "U", 1), (1, "new", "U", 2), (2, "x", "D", 1), (2, "y", "U", 0)],
@@ -88,8 +128,9 @@ def test_merge_idempotent(spark):
     chg = spark.createDataFrame(
         [(2, "upd", "U", 1), (3, "", "D", 1), (99, "ins", "U", 1)], CHANGE_SCHEMA
     )
-    once = apply_changeset(base, chg, keys=["pk"], compact_by=["ts"])
-    twice = apply_changeset(once, chg, keys=["pk"], compact_by=["ts"])
+    chg = compact_changeset(chg, ["pk"], ["ts"])
+    once = apply_changeset(base, chg, keys=["pk"])
+    twice = apply_changeset(once, chg, keys=["pk"])
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
 
 

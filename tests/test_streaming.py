@@ -122,10 +122,11 @@ def test_merge_sink_checkpoint_recovery(spark, sf_dir, tmp_path):
     # only ONE new version (b0 not reprocessed), and the final replica
     # equals the batch merge of the full changeset
     assert sink.current_version() == v_after_first + 1
-    from canvas_data_2_aws_spark.operators.merge import apply_changeset
+    from canvas_data_2_aws_spark.operators.merge import apply_changeset, compact_changeset
 
     expected = apply_changeset(
-        orders, changeset, keys=["o_orderkey"], compact_by=["chg_ts"]
+        orders, compact_changeset(changeset, ["o_orderkey"], ["chg_ts"]),
+        keys=["o_orderkey"],
     )
     final = sink.current_snapshot()
     assert final.count() == expected.count()
@@ -619,7 +620,7 @@ def test_merge_sink_crash_recovery_exactly_once(spark, sf_dir, tmp_path):
     next batch. Assert the final snapshot equals the one-shot batch M1
     apply, bit-for-bit and PK-unique. (The python-source resume test
     covers offsets; this covers the sink commit protocol.)"""
-    from canvas_data_2_aws_spark.operators.merge import apply_changeset
+    from canvas_data_2_aws_spark.operators.merge import apply_changeset, compact_changeset
     from canvas_data_2_aws_spark.queries.merge import derive_changeset
     from canvas_data_2_aws_spark.session import load_table
     from canvas_data_2_aws_spark.streaming.merge_sink import StreamingMergeSink
@@ -675,7 +676,8 @@ def test_merge_sink_crash_recovery_exactly_once(spark, sf_dir, tmp_path):
     assert sink.current_version() == v_crash + 1
 
     expected = apply_changeset(
-        orders, changeset, keys=["o_orderkey"], compact_by=["chg_ts"]
+        orders, compact_changeset(changeset, ["o_orderkey"], ["chg_ts"]),
+        keys=["o_orderkey"],
     )
     got = sink.current_snapshot()
     assert got.exceptAll(expected).count() == 0
