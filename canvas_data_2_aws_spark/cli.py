@@ -19,7 +19,6 @@ import os
 import sys
 
 from . import registry, replica, session
-from .operators.merge import apply_changeset, observe_rejects
 from .sources.envelope import read_changeset_jsonl
 
 
@@ -36,51 +35,43 @@ def cmd_syncdb(args) -> int:
     high-water token) in ONE replica transaction.
 
     Mirrors the reference's all-tables-or-nothing Postgres transaction
-    around per-table token updates `[public: DAP]`: ``replica.transact``
-    stages every merged table to a fresh ``{table}__v{N}`` directory and
-    swaps the manifest only after all of them are written, so a crash
-    before the swap leaves the prior manifest (old data, old token)
-    fully intact.
+    around per-table token updates `[public: DAP]`. ``replica.sync``,
+    the merge-and-commit step the streaming sinks run too, stages every
+    merged table to a fresh ``{table}__v{N}`` directory and swaps the
+    manifest only after all of them are written, so a crash before the
+    swap leaves the prior manifest (old data, old token) fully intact.
 
     Each table is one pass: the base is read with its recorded schema,
-    the changeset is decoded and compacted once (both merge branches
-    share the result), and the merged rows are written once. The
-    malformed-record count and the printed row count are observed on
-    that write, so no other Spark job runs. A changeset with malformed
-    records is refused: exit 1 and the manifest is left untouched.
+    the changeset is decoded and compacted once to the latest change
+    per key by ``meta.ts``, file order breaking ties (M3), and the
+    merged rows are written once. The malformed-record count and the
+    printed row count are observed on that write, so no other Spark job
+    runs. A changeset with malformed records is refused: exit 1 and the
+    manifest is left untouched.
     """
     spark = session.get_spark(app="cda2-syncdb")
-    root = args.replica
     tables, changes_list, keys = args.table, args.changes, args.key
-    if not (len(tables) == len(changes_list) == len(keys)):
+    if not (len(tables) == len(changes_list) == len(keys) == len(set(tables))):
         print(
-            "syncdb: --table/--changes/--key must be repeated together",
+            "syncdb: --table/--changes/--key must be repeated together,"
+            " once per table",
             file=sys.stderr,
         )
         return 2
-    frames, rejects = {}, []
-    for table, changes_path, key in zip(tables, changes_list, keys):
-        # Compact multi-change-per-PK batches to the latest by meta.ts
-        # (file order as the tie-break) BEFORE applying — without this
-        # a changeset touching one key twice produces duplicate-PK rows
-        # and order-dependent results (M3).
-        compacted, obs = observe_rejects(
+    changesets = {
+        table: (
+            f"{table}__v",
             read_changeset_jsonl(
-                spark,
-                changes_path,
-                table=table,
-                key_cols=[key],
-                ts_col="_change_ts",
-                seq_col="_change_seq",
+                spark, path, table=table, key_cols=[key],
+                ts_col="_change_ts", seq_col="_change_seq",
             ),
             [key],
             ["_change_ts", "_change_seq"],
         )
-        rejects.append(obs)
-        merged = apply_changeset(replica.read(spark, root, table), compacted, keys=[key])
-        frames[table] = (f"{table}__v", merged)
+        for table, path, key in zip(tables, changes_list, keys)
+    }
     try:
-        rows = replica.transact(root, frames, token=args.token, rejects=rejects)
+        rows = replica.sync(args.replica, changesets, token=args.token)
     except replica.Rejected as exc:
         print(f"syncdb: {exc}", file=sys.stderr)
         return 1

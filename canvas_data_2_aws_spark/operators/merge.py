@@ -17,7 +17,8 @@ Iceberg/Delta; the plan below is what those engines execute underneath
 with the base bucketed by PK at rest (SCALE.md) only the (small)
 changeset shuffles. Malformed change records are counted over the
 compaction's own window (:func:`observe_rejects`), so a writer can
-refuse them without an extra job.
+refuse them without an extra job. A (group → n, total) view over the
+table is maintained from the same changeset by :func:`fold_view`.
 """
 
 from __future__ import annotations
@@ -72,8 +73,8 @@ def observe_rejects(
     truncated or non-JSON line decodes to a null envelope) or its
     ``action`` is neither ``U`` nor ``D``. Read the count from the
     returned observation's ``rejected`` metric after that action; no
-    extra Spark job runs for it. A writer that finds it non-zero refuses
-    the commit (``replica.transact``).
+    extra Spark job runs for it. ``replica.sync`` refuses the commit
+    when it is non-zero.
 
     The records are counted after compaction, above its lazy
     checkpoint: an observation of the raw records would complete when
@@ -118,6 +119,45 @@ def apply_changeset(
     survivors = base.join(changes.select(*keys), on=list(keys), how="left_anti")
     upserts = changes.where(F.col("action") == ACTION_UPSERT).select(*base.columns)
     return survivors.unionByName(upserts)
+
+
+# The exact decimal every (group -> n, total) view sums in: a delta-
+# maintained view then equals a fresh recompute bit-for-bit.
+_VIEW_SUM = "decimal(28,6)"
+
+
+def aggregate_view(rows: DataFrame, group: str, measure: str) -> DataFrame:
+    """The stored state of a (group → n, total) view over ``rows``: each
+    group's row count and exact decimal sum of ``measure``. This is the
+    view's bootstrap; :func:`fold_view` maintains it from then on."""
+    return rows.groupBy(group).agg(
+        F.count("*").alias("n"),
+        F.sum(F.col(measure).cast(_VIEW_SUM)).alias("total"),
+    )
+
+
+def fold_view(
+    view: DataFrame,
+    new_images: DataFrame,
+    old_images: DataFrame,
+    group: str,
+    measure: str,
+) -> DataFrame:
+    """Fold one changeset into a stored :func:`aggregate_view` without
+    re-aggregating the table: each new image (an upserted row) adds +1
+    and +measure to its group, each old image (the base row of a touched
+    key, updated or deleted) adds −1 and −measure. Groups maintained to
+    zero rows are dropped, as a recompute would never produce them."""
+    m = F.col(measure).cast(_VIEW_SUM)
+    adds = new_images.select(group, F.lit(1).cast("long").alias("n"), m.alias("total"))
+    rems = old_images.select(group, F.lit(-1).cast("long").alias("n"), (-m).alias("total"))
+    return (
+        view.unionByName(adds)
+        .unionByName(rems)
+        .groupBy(group)
+        .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
+        .where(F.col("n") > 0)
+    )
 
 
 def snapshot_load_bucketed(

@@ -913,40 +913,6 @@ _BPE_FOLD_SQL = r"""filter(split(
   ), '\\|\\|'), x -> x <> '')"""
 
 
-def _bpe_learned_merges(docs: DataFrame) -> DataFrame:
-    """1-row frame holding the rank-ordered top-K merge list (the
-    Spark twin of the topm/ml oracle CTEs): word-frequency agg,
-    char-pair explode over distinct words, pair count, struct sort on
-    (-cnt, pair) to reproduce ORDER BY cnt DESC, pair after the
-    limit. Shared by encode / fertility / vocab-growth so the
-    learning step cannot drift between queries."""
-    wf = (
-        docs.select(F.explode(T.tokens()).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("freq"))
-    )
-    prs = wf.where(F.length("w") >= 2).select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, length(w) - 1),"
-                " j -> substring(w, j, 2))"
-            )
-        ).alias("pair"),
-        "freq",
-    )
-    topm = (
-        prs.groupBy("pair")
-        .agg(F.sum("freq").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), "pair")
-        .limit(_BPE_ENCODE_K)
-    )
-    return topm.agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(-cnt AS nc, pair AS p))),"
-            " x -> x.p)"
-        ).alias("merges")
-    )
-
 _BPE_ENCODE_ORACLE = f"""
 WITH {_BPE_WF_PAIRS_CTES},
 topm AS (

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..operators.merge import apply_changeset
+from ..operators.merge import ACTION_UPSERT, aggregate_view, apply_changeset, fold_view
 from ..operators import ranks as R
 from ..registry import graded
 from ..session import load_table, materialize_outliving
@@ -26,8 +26,9 @@ _ORDER_COLS = (
     "o_orderpriority",
 )
 
-_MERGE_ORACLE = """
-WITH mx AS (SELECT MAX(o_orderkey) AS m FROM orders),
+# The changeset derivation (``derive_changeset``) as DuckDB CTEs:
+# ``mx`` and ``ins`` build the fresh inserts, ``changeset`` the rows.
+_CHANGESET_CTES = """mx AS (SELECT MAX(o_orderkey) AS m FROM orders),
 ins AS (
   SELECT mx.m + ROW_NUMBER() OVER (ORDER BY s.o_orderkey) AS o_orderkey,
          s.o_custkey, s.o_orderstatus, s.o_totalprice, s.o_orderdate,
@@ -45,7 +46,10 @@ changeset AS (
   FROM orders WHERE o_orderkey % 97 = 0
   UNION ALL
   SELECT * FROM ins
-)
+)"""
+
+_MERGE_ORACLE = f"""
+WITH {_CHANGESET_CTES}
 SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
        o_orderpriority
 FROM orders
@@ -248,26 +252,8 @@ def jsonl_envelope_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # keyed probe for the changed keys' OLD rows — at 100 TB the base agg
 # is stored view state and the probe is partition-pruned, so the cost
 # scales with |changeset|, not |base|.
-_IVM_ORACLE = """
-WITH mx AS (SELECT MAX(o_orderkey) AS m FROM orders),
-ins AS (
-  SELECT mx.m + ROW_NUMBER() OVER (ORDER BY s.o_orderkey) AS o_orderkey,
-         s.o_custkey, s.o_orderstatus, s.o_totalprice, s.o_orderdate,
-         s.o_orderpriority, 'U' AS action
-  FROM (SELECT * FROM orders ORDER BY o_orderkey LIMIT 100) s, mx
-),
-changeset AS (
-  SELECT o_orderkey, o_custkey, 'X' AS o_orderstatus,
-         o_totalprice + 1.0 AS o_totalprice, o_orderdate, o_orderpriority,
-         'U' AS action
-  FROM orders WHERE o_orderkey % 10 = 0 AND o_orderkey % 97 <> 0
-  UNION ALL
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-         o_orderpriority, 'D' AS action
-  FROM orders WHERE o_orderkey % 97 = 0
-  UNION ALL
-  SELECT * FROM ins
-),
+_IVM_ORACLE = f"""
+WITH {_CHANGESET_CTES},
 merged AS (
   SELECT o_orderkey, o_orderstatus, o_totalprice
   FROM orders WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changeset)
@@ -281,71 +267,44 @@ FROM merged GROUP BY o_orderstatus
 """
 
 
+def _as_graded(view: DataFrame, group: str) -> DataFrame:
+    """A maintained (group → n, total) view in the graded shape."""
+    return view.select(
+        group, F.col("n").alias("n_orders"), F.col("total").cast("double").alias("revenue")
+    )
+
+
 @graded("merge_incremental_agg", oracle=_IVM_ORACLE)
 def merge_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance: the per-status (count, revenue)
     view is updated by DELTAS — +row for every upsert, −row for every
     changed key's old image — instead of re-aggregating the merged
-    table. The oracle recomputes from scratch on the merged replica;
-    exact decimal arithmetic makes delta-maintenance ≡ recompute
-    bit-for-bit. Groups maintained to zero are dropped, matching the
-    recompute exactly."""
+    table (``operators.merge.fold_view``, the fold the streaming IVM
+    sink runs). The oracle recomputes from scratch on the merged
+    replica; exact decimal arithmetic makes delta-maintenance ≡
+    recompute bit-for-bit."""
     orders = load_table(spark, sf_dir, "orders")
     cs = derive_changeset(orders)
-    dec = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
-
-    # Stored view state (in production: read back, not recomputed).
-    old_agg = orders.groupBy("o_orderstatus").agg(
-        F.count("*").alias("dn"), F.sum(dec("o_totalprice")).alias("dr")
-    )
-    # +delta: every upserted row's new image.
-    adds = cs.where(F.col("action") == "U").select(
-        "o_orderstatus",
-        F.lit(1).cast("long").alias("dn"),
-        dec("o_totalprice").alias("dr"),
-    )
     # −delta: old image of every key the changeset touches (updates and
     # deletes; insert keys probe nothing). Keyed semi-probe, not a scan.
-    touched = cs.select("o_orderkey").distinct()
-    rems = orders.join(touched, "o_orderkey", "left_semi").select(
+    old = orders.join(cs.select("o_orderkey"), "o_orderkey", "left_semi")
+    return _as_graded(
+        fold_view(
+            # Stored view state (in production: read back, not recomputed).
+            aggregate_view(orders, "o_orderstatus", "o_totalprice"),
+            cs.where(F.col("action") == ACTION_UPSERT),
+            old,
+            "o_orderstatus",
+            "o_totalprice",
+        ),
         "o_orderstatus",
-        F.lit(-1).cast("long").alias("dn"),
-        (-dec("o_totalprice")).alias("dr"),
-    )
-    return (
-        old_agg.unionByName(adds)
-        .unionByName(rems)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.sum("dn").alias("n_orders"),
-            F.sum("dr").cast("double").alias("revenue"),
-        )
-        .where(F.col("n_orders") > 0)
     )
 
 
 # --- EXT: snapshot diff (replica drift audit) -----------------------------------
 
-_SNAPDIFF_ORACLE = """
-WITH mx AS (SELECT MAX(o_orderkey) AS m FROM orders),
-ins AS (
-  SELECT mx.m + ROW_NUMBER() OVER (ORDER BY s.o_orderkey) AS o_orderkey,
-         s.o_custkey, s.o_orderstatus, s.o_totalprice, s.o_orderdate,
-         s.o_orderpriority, 'U' AS action
-  FROM (SELECT * FROM orders ORDER BY o_orderkey LIMIT 100) s, mx
-),
-changeset AS (
-  SELECT o_orderkey, o_custkey, 'X' AS o_orderstatus,
-         o_totalprice + 1.0 AS o_totalprice, o_orderdate, o_orderpriority,
-         'U' AS action
-  FROM orders WHERE o_orderkey % 10 = 0 AND o_orderkey % 97 <> 0
-  UNION ALL
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-         o_orderpriority, 'D' AS action
-  FROM orders WHERE o_orderkey % 97 = 0
-  UNION ALL
-  SELECT * FROM ins
-),
+_SNAPDIFF_ORACLE = f"""
+WITH {_CHANGESET_CTES},
 merged AS (
   SELECT o_orderkey, o_orderstatus, o_totalprice
   FROM orders WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changeset)
@@ -704,26 +663,8 @@ def merge_changeset_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # present in the written frame. The changeset keeps every row's month
 # (updates don't move dates here); a date-moving update would add the
 # OLD row's month to the touched set — same derivation, both sides.
-_DPO_ORACLE = """
-WITH mx AS (SELECT MAX(o_orderkey) AS m FROM orders),
-ins AS (
-  SELECT mx.m + ROW_NUMBER() OVER (ORDER BY s.o_orderkey) AS o_orderkey,
-         s.o_custkey, s.o_orderstatus, s.o_totalprice, s.o_orderdate,
-         s.o_orderpriority, 'U' AS action
-  FROM (SELECT * FROM orders ORDER BY o_orderkey LIMIT 100) s, mx
-),
-changeset AS (
-  SELECT o_orderkey, o_custkey, 'X' AS o_orderstatus,
-         o_totalprice + 1.0 AS o_totalprice, o_orderdate, o_orderpriority,
-         'U' AS action
-  FROM orders WHERE o_orderkey % 10 = 0 AND o_orderkey % 97 <> 0
-  UNION ALL
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-         o_orderpriority, 'D' AS action
-  FROM orders WHERE o_orderkey % 97 = 0
-  UNION ALL
-  SELECT * FROM ins
-),
+_DPO_ORACLE = f"""
+WITH {_CHANGESET_CTES},
 merged AS (
   SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
          o_orderpriority
@@ -926,26 +867,8 @@ def merge_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scratch on the merged replica; exact decimal deltas make
 # maintenance ≡ recompute bit-for-bit, so the hash-match IS the proof
 # of the IVM algebra.
-_IVM_JOIN_ORACLE = """
-WITH mx AS (SELECT MAX(o_orderkey) AS m FROM orders),
-ins AS (
-  SELECT mx.m + ROW_NUMBER() OVER (ORDER BY s.o_orderkey) AS o_orderkey,
-         s.o_custkey, s.o_orderstatus, s.o_totalprice, s.o_orderdate,
-         s.o_orderpriority, 'U' AS action
-  FROM (SELECT * FROM orders ORDER BY o_orderkey LIMIT 100) s, mx
-),
-changeset AS (
-  SELECT o_orderkey, o_custkey, 'X' AS o_orderstatus,
-         o_totalprice + 1.0 AS o_totalprice, o_orderdate, o_orderpriority,
-         'U' AS action
-  FROM orders WHERE o_orderkey % 10 = 0 AND o_orderkey % 97 <> 0
-  UNION ALL
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-         o_orderpriority, 'D' AS action
-  FROM orders WHERE o_orderkey % 97 = 0
-  UNION ALL
-  SELECT * FROM ins
-),
+_IVM_JOIN_ORACLE = f"""
+WITH {_CHANGESET_CTES},
 merged AS (
   SELECT o_orderkey, o_custkey, o_totalprice
   FROM orders WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changeset)
@@ -972,45 +895,24 @@ def merge_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     cs = derive_changeset(orders)
-    dec = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
     dim = F.broadcast(customer.select("c_custkey", "c_mktsegment"))
 
-    # Stored view state (in production: read back, not recomputed).
-    old_view = (
-        orders.join(dim, orders.o_custkey == dim.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("dn"), F.sum(dec("o_totalprice")).alias("dr"))
-    )
-    # ΔV⁺ = new images ⋈ dim.
-    adds = (
-        cs.where(F.col("action") == "U")
-        .join(dim, cs.o_custkey == dim.c_custkey)
-        .select(
+    def joined(images: DataFrame) -> DataFrame:
+        return images.join(dim, images.o_custkey == dim.c_custkey)
+
+    # ΔV⁺ = new images ⋈ dim; ΔV⁻ = old images of touched keys ⋈ dim
+    # (keyed probe, not a scan).
+    old = orders.join(cs.select("o_orderkey"), "o_orderkey", "left_semi")
+    return _as_graded(
+        fold_view(
+            # Stored view state (in production: read back, not recomputed).
+            aggregate_view(joined(orders), "c_mktsegment", "o_totalprice"),
+            joined(cs.where(F.col("action") == ACTION_UPSERT)),
+            joined(old),
             "c_mktsegment",
-            F.lit(1).cast("long").alias("dn"),
-            dec("o_totalprice").alias("dr"),
-        )
-    )
-    # ΔV⁻ = old images of touched keys ⋈ dim (keyed probe, not a scan).
-    touched = cs.select("o_orderkey").distinct()
-    rems = (
-        orders.join(touched, "o_orderkey", "left_semi")
-        .join(dim, orders.o_custkey == dim.c_custkey)
-        .select(
-            "c_mktsegment",
-            F.lit(-1).cast("long").alias("dn"),
-            (-dec("o_totalprice")).alias("dr"),
-        )
-    )
-    return (
-        old_view.unionByName(adds)
-        .unionByName(rems)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.sum("dn").cast("bigint").alias("n_orders"),
-            F.sum("dr").cast("double").alias("revenue"),
-        )
-        .where(F.col("n_orders") > 0)
+            "o_totalprice",
+        ),
+        "c_mktsegment",
     )
 
 

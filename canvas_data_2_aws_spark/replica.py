@@ -3,9 +3,11 @@
 The reference pipeline commits each table's new high-water token in one
 Postgres transaction, so a crashed sync never leaves half the replica
 advanced `[public: DAP]`. Parquet directories have no transactions, so
-this module supplies the standard lakehouse-style substitute, and every
-writer (``initdb``, ``syncdb``, ``optimize`` and the streaming sinks)
-commits through :func:`transact`:
+this module supplies the standard lakehouse-style substitute. Every
+writer commits through it: ``initdb``, ``optimize`` and the sinks'
+bootstrap through :func:`transact`, and ``syncdb`` and the streaming
+sinks through :func:`sync`, the one merge-and-commit step of a
+changeset, whether it came by cron or by stream:
 
 - ``_manifest.json`` at the replica root is the single source of truth.
   It holds a monotonically increasing version, the sync token, the last
@@ -13,10 +15,13 @@ commits through :func:`transact`:
   schema it was written with.
 - A transaction stages every frame into a NEW directory (the caller's
   prefix plus the new version: ``orders__v7``, ``v7``, ``view_v7``),
-  refuses if a reject observation counted a malformed record, then
-  swaps the manifest via write-temp + fsync + ``os.replace``, which is
-  atomic on POSIX. A crash at ANY earlier point leaves the prior
-  manifest, and the directories it references, untouched.
+  then swaps the manifest via write-temp + fsync + ``os.replace``,
+  which is atomic on POSIX. A crash at ANY earlier point leaves the
+  prior manifest, and the directories it references, untouched.
+- :func:`sync` compacts each changeset once, counts its malformed
+  records on that same pass, merges it into the current base and
+  stages the result; if the count is not zero it refuses before the
+  swap. A batch id at or below the manifest's is a replay, skipped.
 - After the swap, :func:`vacuum` reclaims every directory of a live
   entry's prefix family that the manifest no longer references: the
   superseded version and any staged leftover of a crashed transaction.
@@ -33,17 +38,19 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections.abc import Iterable, Mapping
+from collections.abc import Callable, Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
+
+from .operators.merge import apply_changeset, observe_rejects
 
 MANIFEST = "_manifest.json"
 _DIGITS = "0123456789"
 
 
 class Rejected(ValueError):
-    """A transaction's input held malformed records (as
+    """A :func:`sync` changeset held malformed records (as
     ``operators.merge.observe_rejects`` defines them); nothing was
     committed."""
 
@@ -101,18 +108,62 @@ def transact(
     *,
     token: str | None = None,
     batch_id: int | None = None,
-    rejects: Iterable[Observation] = (),
 ) -> dict[str, int]:
     """Commit ``frames`` (entry name -> (directory prefix, frame)) as the
     replica's next version, all or nothing, and return each entry's row
     count as observed on its write.
 
-    Every frame is staged to ``{prefix}{version}`` first. Each reject
-    observation (``operators.merge.observe_rejects``) must have run as
-    part of those writes; if any counted a malformed record, raise
-    :class:`Rejected` before the commit. Entries not in ``frames`` keep
-    their directories; ``token`` and ``batch_id`` are recorded when
-    given. The superseded versions are vacuumed after the swap."""
+    Every frame is staged to ``{prefix}{version}`` before the manifest
+    swap. Entries not in ``frames`` keep their directories; ``token``
+    and ``batch_id`` are recorded when given. The superseded versions
+    are vacuumed after the swap."""
+    return _commit(root, frames, token, batch_id, rejects=())
+
+
+def sync(
+    root: str,
+    changesets: Mapping[str, tuple[str, DataFrame, Sequence[str], Sequence[str]]],
+    *,
+    token: str | None = None,
+    batch_id: int | None = None,
+    derive: Callable[[DataFrame, DataFrame], dict] | None = None,
+) -> dict[str, int]:
+    """Merge one changeset per entry (entry name -> (directory prefix,
+    decoded changes, keys, order_by)) and commit every merged entry as
+    one :func:`transact` version; return the observed row counts.
+
+    Each changeset is compacted once to its latest change per key, and
+    its malformed records are counted on that pass
+    (``operators.merge.observe_rejects``). The base is read in the
+    changeset's own session: the count completes only in the session
+    that runs it. ``derive(base, compacted)`` returns further entries
+    to commit alongside, computed from the same compacted rows. If any
+    record was malformed, :class:`Rejected` is raised after staging and
+    nothing is committed. A ``batch_id`` at or below the manifest's is
+    a replay of a committed batch: nothing is read and ``{}`` returned."""
+    if batch_id is not None and batch_id <= load(root).get("batch_id", -1):
+        return {}
+    frames, rejects = {}, []
+    for name, (prefix, changes, keys, order_by) in changesets.items():
+        compacted, obs = observe_rejects(changes, keys, order_by)
+        rejects.append(obs)
+        base = read(changes.sparkSession, root, name)
+        if derive is not None:
+            frames.update(derive(base, compacted))
+        frames[name] = (prefix, apply_changeset(base, compacted, keys))
+    return _commit(root, frames, token, batch_id, rejects)
+
+
+def _commit(
+    root: str,
+    frames: Mapping[str, tuple[str, DataFrame]],
+    token: str | None,
+    batch_id: int | None,
+    rejects: Iterable[Observation],
+) -> dict[str, int]:
+    """Stage, refuse, swap and vacuum. Each reject observation must
+    have run as part of the staged writes: ``Observation.get`` waits
+    for one, so :func:`sync` alone passes them."""
     man = load(root)
     version = man["version"] + 1
     rows, staged = {}, {}

@@ -1,16 +1,14 @@
 """Streaming merge sink (SURVEY §2.9 T6): per-micro-batch incremental
 merge via ``foreachBatch`` — the streaming form of the reference's
-``syncdb`` loop. Each micro-batch is one changeset; the sink compacts
-it, applies it to the current replica snapshot and commits the result
-through the same replica transaction as the CLI (``replica.transact``).
+``syncdb`` loop. Each micro-batch is one changeset, merged and
+committed by the same call as the CLI's ``syncdb`` (``replica.sync``):
+compacted once, refused if it holds a null key or an action other than
+``U``/``D``, skipped if its batch id is a replay, and committed as one
+replica version.
 
 ``table_dir`` is a replica root of its own: its manifest's ``snapshot``
 entry lives in ``v{N}`` (and the IVM sink's ``view`` entry in
-``view_v{N}``), and one manifest swap advances both. The manifest also
-records the last applied batch id, so a micro-batch that Spark replays
-after a crash between the commit and its checkpoint is skipped rather
-than merged again. A batch holding a null key or an action other than
-``U``/``D`` is refused: it raises and commits nothing. Everything stays
+``view_v{N}``), and one manifest swap advances both. Everything stays
 distributed: no driver-side collect of table data, ever.
 """
 
@@ -21,7 +19,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import replica
-from ..operators.merge import apply_changeset, observe_rejects
+from ..operators.merge import ACTION_UPSERT, aggregate_view, fold_view
 
 
 class StreamingMergeSink:
@@ -54,19 +52,15 @@ class StreamingMergeSink:
     # -- the merge loop ----------------------------------------------------
 
     def apply_batch(self, changes: DataFrame, batch_id: int) -> None:
-        """Compact the batch once and commit the merged snapshot, plus
-        whatever :meth:`_derived` computes from the same compacted
-        frame, as one replica version. The committed frames are read in
-        the batch's own session (``foreachBatch`` hands over a clone):
-        an observation completes only in the session that runs it."""
-        last = replica.load(self.table_dir).get("batch_id")
-        if last is not None and batch_id <= last:
-            return  # a replay of a committed batch: apply it once
-        compacted, rejects = observe_rejects(changes, self.keys, self.compact_by)
-        base = replica.read(changes.sparkSession, self.table_dir, "snapshot")
-        frames = self._derived(base, compacted)
-        frames["snapshot"] = ("v", apply_changeset(base, compacted, keys=self.keys))
-        replica.transact(self.table_dir, frames, batch_id=batch_id, rejects=[rejects])
+        """Merge and commit one micro-batch, plus whatever
+        :meth:`_derived` computes from its compacted rows, as one
+        replica version (``replica.sync``)."""
+        replica.sync(
+            self.table_dir,
+            {"snapshot": ("v", changes, self.keys, self.compact_by)},
+            batch_id=batch_id,
+            derive=self._derived,
+        )
 
     def _derived(self, base: DataFrame, compacted: DataFrame) -> dict:
         """Entries committed alongside each batch's snapshot."""
@@ -109,43 +103,25 @@ class StreamingIVMSink(StreamingMergeSink):
         self.view_group = view_group
         self.view_sum = view_sum
 
-    def _view_agg(self, df: DataFrame) -> DataFrame:
-        return df.groupBy(self.view_group).agg(
-            F.count("*").alias("n"),
-            F.sum(F.col(self.view_sum).cast("decimal(28,6)")).alias("total"),
-        )
-
     def current_view(self) -> DataFrame:
         return replica.read(self.spark, self.table_dir, "view")
 
     def bootstrap(self, base: DataFrame) -> None:
+        view = aggregate_view(base, self.view_group, self.view_sum)
         replica.transact(
-            self.table_dir,
-            {"view": ("view_v", self._view_agg(base)), "snapshot": ("v", base)},
+            self.table_dir, {"view": ("view_v", view), "snapshot": ("v", base)}
         )
 
     def _derived(self, base: DataFrame, compacted: DataFrame) -> dict:
         """The view delta, read from the same compacted frame as the
-        replica merge."""
-        dec = F.col(self.view_sum).cast("decimal(28,6)")
-        adds = compacted.where(F.col("action") == "U").select(
+        replica merge: the upserts are the new images, and the base rows
+        of every touched key the old ones."""
+        old = base.join(compacted.select(*self.keys), self.keys, "left_semi")
+        new_view = fold_view(
+            replica.read(base.sparkSession, self.table_dir, "view"),
+            compacted.where(F.col("action") == ACTION_UPSERT),
+            old,
             self.view_group,
-            F.lit(1).cast("long").alias("n"),
-            dec.alias("total"),
-        )
-        # Compaction leaves one row per key, so the keys need no distinct.
-        touched = compacted.select(*self.keys)
-        rems = base.join(touched, self.keys, "left_semi").select(
-            self.view_group,
-            F.lit(-1).cast("long").alias("n"),
-            (-dec).alias("total"),
-        )
-        new_view = (
-            replica.read(base.sparkSession, self.table_dir, "view")
-            .unionByName(adds)
-            .unionByName(rems)
-            .groupBy(self.view_group)
-            .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
-            .where(F.col("n") > 0)
+            self.view_sum,
         )
         return {"view": ("view_v", new_view)}

@@ -407,6 +407,65 @@ def test_initdb_failed_write_keeps_prior_version(spark, sf_dir, tmp_path,
         replica_mod.table_dir(replica, "orders")).count() == rows
 
 
+def test_optimize_crash_at_manifest_swap_keeps_prior_version(spark, sf_dir, tmp_path,
+                                                            monkeypatch):
+    """An optimize whose manifest ``os.replace`` dies leaves the manifest
+    byte-identical and the prior directory reading the same rows; a
+    rerun commits and leaves only the live directory."""
+    import os
+
+    import pytest
+
+    replica = str(tmp_path / "optimize_crash")
+    assert cli.main(
+        ["initdb", "--table", "orders", "--source-dir", sf_dir, "--replica", replica]
+    ) == 0
+    manifest = os.path.join(replica, replica_mod.MANIFEST)
+    with open(manifest, "rb") as fh:
+        before = fh.read()
+    prior = replica_mod.table_dir(replica, "orders")
+    rows = sorted(spark.read.parquet(prior).collect())
+    argv = ["optimize", "--table", "orders", "--replica", replica,
+            "--key", "o_orderkey"]
+    real_replace = os.replace
+
+    def crash_on_manifest(src, dst):
+        if dst.endswith(replica_mod.MANIFEST):
+            raise OSError("injected crash at the manifest swap")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(replica_mod.os, "replace", crash_on_manifest)
+    with pytest.raises(OSError, match="injected crash"):
+        cli.main(argv)
+    monkeypatch.undo()
+
+    with open(manifest, "rb") as fh:
+        assert fh.read() == before
+    assert replica_mod.table_dir(replica, "orders") == prior
+    assert sorted(spark.read.parquet(prior).collect()) == rows
+
+    assert cli.main(argv) == 0
+    man = replica_mod.load(replica)
+    dirs = {d for d in os.listdir(replica) if os.path.isdir(os.path.join(replica, d))}
+    assert dirs == {man["tables"]["orders"]["dir"]}
+    assert sorted(replica_mod.read(spark, replica, "orders").collect()) == rows
+
+
+def test_syncdb_refuses_repeated_table(spark, sf_dir, tmp_path, capsys):
+    """One table named twice in one syncdb is refused before anything is
+    read: exit 2 and no manifest is written."""
+    import os
+
+    replica = str(tmp_path / "repeated")
+    ch = _delete_changeset(tmp_path, "rep.jsonl", "o_orderkey", [1])
+    argv = ["syncdb", "--replica", replica]
+    for _ in range(2):
+        argv += ["--table", "orders", "--changes", ch, "--key", "o_orderkey"]
+    assert cli.main(argv) == 2
+    assert "once per table" in capsys.readouterr().err
+    assert not os.path.exists(os.path.join(replica, replica_mod.MANIFEST))
+
+
 def test_syncdb_failed_staging_leaves_prior_manifest(spark, sf_dir, tmp_path):
     """If the SECOND table's changeset is unreadable, the first table's
     already-staged merge must not become visible (no partial commit)."""
