@@ -62,7 +62,13 @@ FROM changeset WHERE action = 'U'
 
 
 def derive_changeset(orders: DataFrame) -> DataFrame:
-    """Deterministic synthetic changeset over ``orders`` (FIXTURES.md)."""
+    """Deterministic synthetic changeset over ``orders`` (FIXTURES.md).
+
+    The frame is lazy: each read re-runs the three-branch derivation.
+    A caller that reads it more than once checkpoints it
+    (``localCheckpoint(eager=False)``), so it is derived once; in
+    production the changeset arrives as data (sources/envelope), and
+    the changeset-sized checkpoint mirrors that shape."""
     key = F.col("o_orderkey")
     updates = (
         orders.where((key % 10 == 0) & (key % 97 != 0))
@@ -89,17 +95,6 @@ def derive_changeset(orders: DataFrame) -> DataFrame:
         updates.select(*_ORDER_COLS, "action")
         .unionByName(deletes.select(*_ORDER_COLS, "action"))
         .unionByName(inserts)
-        # r14 §2.4: every consumer reads the changeset at least twice
-        # (apply_changeset probes touched keys AND unions the upsert
-        # payload; the IVM queries add delta legs), and unmaterialized
-        # each read re-ran the three-branch derivation — up to 23
-        # base-table scans in one plan (merge_idempotent_reapply).
-        # The frame is changeset-sized (~11% of orders); the lazy
-        # checkpoint derives it once per invocation. In production the
-        # changeset arrives AS data (sources/envelope), so the
-        # materialization mirrors the real shape rather than hiding a
-        # recompute.
-        .localCheckpoint(eager=False)
     )
 
 
@@ -108,7 +103,8 @@ def merge_upsert_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Core syncdb semantics: apply a keyed changeset to the replica
     via the join-based merge plan (operators/merge.py)."""
     orders = load_table(spark, sf_dir, "orders")
-    changeset = derive_changeset(orders)
+    # read twice by apply_changeset (touched keys, upserts)
+    changeset = derive_changeset(orders).localCheckpoint(eager=False)
     return apply_changeset(orders, changeset, keys=["o_orderkey"])
 
 
@@ -141,7 +137,8 @@ def merge_bucketed_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = snapshot_load_bucketed(
             orders, table, ["o_orderkey"], path, buckets=8
         )
-        changeset = derive_changeset(orders)
+        # read twice by apply_changeset
+        changeset = derive_changeset(orders).localCheckpoint(eager=False)
         merged = apply_changeset(base, changeset, keys=["o_orderkey"])
         # Persist the merged result to parquet and re-read, so the
         # returned frame outlives the temp-table drop WITHOUT a
@@ -284,7 +281,8 @@ def merge_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     replica; exact decimal arithmetic makes delta-maintenance ≡
     recompute bit-for-bit."""
     orders = load_table(spark, sf_dir, "orders")
-    cs = derive_changeset(orders)
+    # read twice: the old-image probe and the upserts
+    cs = derive_changeset(orders).localCheckpoint(eager=False)
     # −delta: old image of every key the changeset touches (updates and
     # deletes; insert keys probe nothing). Keyed semi-probe, not a scan.
     old = orders.join(cs.select("o_orderkey"), "o_orderkey", "left_semi")
@@ -337,9 +335,9 @@ def validate_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.merge import apply_changeset
 
     orders = load_table(spark, sf_dir, "orders")
-    merged = apply_changeset(
-        orders, derive_changeset(orders), keys=["o_orderkey"]
-    )
+    # read twice by apply_changeset
+    changeset = derive_changeset(orders).localCheckpoint(eager=False)
+    merged = apply_changeset(orders, changeset, keys=["o_orderkey"])
     b = orders.select(
         F.col("o_orderkey").alias("bk"),
         F.col("o_orderstatus").alias("bs"),
@@ -377,7 +375,8 @@ def merge_idempotent_reapply(spark: SparkSession, sf_dir: str) -> DataFrame:
     property-tested in tests/test_merge.py; this makes the guarantee
     cross-engine-checkable on the canonical changeset.)"""
     orders = load_table(spark, sf_dir, "orders")
-    changeset = derive_changeset(orders)
+    # read four times: twice by each apply_changeset
+    changeset = derive_changeset(orders).localCheckpoint(eager=False)
     once = apply_changeset(orders, changeset, keys=["o_orderkey"])
     return apply_changeset(once, changeset, keys=["o_orderkey"])
 
@@ -390,22 +389,23 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The envelope changeset read back through the CUSTOM Python
     DataSource (``format("cd2_envelope")``,
     sources/cd2_datasource.py): changeset → JSONL part-files on disk →
-    planner maps one part to one input partition → per-partition
-    Python decode → typed flat rows. Graded against the same
-    changeset-definition oracle as the from_json codec
-    (jsonl_envelope_roundtrip), so BOTH ingest paths are proven
-    equivalent. o_orderdate is excluded for the same reason as there
+    planner maps one part to one input partition → the raw record
+    lines → ``decode_envelope`` → typed flat rows. Graded against the
+    same changeset-definition oracle as jsonl_envelope_roundtrip: both
+    read through one codec, so a record decodes the same whichever way
+    it was read. o_orderdate is excluded for the same reason as there
     (JSON timestamp formatting is the codec test's concern, not the
     source's)."""
     import shutil
     import tempfile
 
     from ..sources.cd2_datasource import register
-    from ..sources.envelope import encode_envelope
+    from ..sources.envelope import decode_envelope, encode_envelope
 
     orders = load_table(spark, sf_dir, "orders")
-    changeset = derive_changeset(orders).drop("o_orderdate")
-    wire = encode_envelope(changeset, key_cols=["o_orderkey"])
+    changeset = derive_changeset(orders).localCheckpoint(eager=False)
+    # written twice, once per part-file
+    wire = encode_envelope(changeset.drop("o_orderdate"), key_cols=["o_orderkey"])
     out = tempfile.mkdtemp(prefix="cda2_pysrc_")
     try:
         # Two part-files → two source partitions (the reference's
@@ -417,12 +417,11 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).text(f"{out}/part1")
         register(spark)
-        df = (
-            spark.read.format("cd2_envelope")
-            .option("path", f"{out}/part*/*.txt")
-            .option("table", "orders")
-            .option("keys", "o_orderkey")
-            .load()
+        records = spark.read.format("cd2_envelope").option(
+            "path", f"{out}/part*/*.txt"
+        ).load()
+        df = decode_envelope(
+            records, table="orders", key_cols=["o_orderkey"], record_col="value"
         )
         # Executor-block checkpoint (not a driver collect): changeset-
         # sized, only needs to outlive the tempdir cleanup.
@@ -709,7 +708,8 @@ def merge_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.withColumn("om", om).repartition(F.col("om")).write.mode(
             "overwrite"
         ).partitionBy("om").parquet(tmp)
-        changeset = derive_changeset(orders)
+        # read three times: the month list, then twice by apply_changeset
+        changeset = derive_changeset(orders).localCheckpoint(eager=False)
         months = [
             r.om for r in changeset.select(om).distinct().collect()
         ]  # partition manifest, driver-sized
@@ -894,7 +894,8 @@ def merge_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     old-image probe — the delta joins scale with |changeset|."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    cs = derive_changeset(orders)
+    # read twice: the old-image probe and the upserts
+    cs = derive_changeset(orders).localCheckpoint(eager=False)
     dim = F.broadcast(customer.select("c_custkey", "c_mktsegment"))
 
     def joined(images: DataFrame) -> DataFrame:

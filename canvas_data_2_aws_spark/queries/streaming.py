@@ -294,8 +294,11 @@ def stream_merge_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .merge import derive_changeset
 
     orders = load_table(spark, sf_dir, "orders")
-    changeset = derive_changeset(orders).withColumn(
-        "chg_ts", F.current_timestamp()
+    # written twice, once per micro-batch file
+    changeset = (
+        derive_changeset(orders)
+        .localCheckpoint(eager=False)
+        .withColumn("chg_ts", F.current_timestamp())
     )
     base_dir = tempfile.mkdtemp(prefix="cda2_msink_")
     chg_dir = tempfile.mkdtemp(prefix="cda2_chg_")
@@ -409,19 +412,20 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger-once runs SHARING one checkpoint — the second run resumes
     from the committed offset and reads only the unconsumed part,
     proving the since-token persistence the reference's syncdb relies
-    on. Returns per-run row counts plus the combined action counts
-    (equality with the full changeset asserted in
-    tests/test_envelope.py)."""
+    on. Each micro-batch's raw record lines are typed by one codec,
+    ``decode_envelope``, as in the batch read. Returns per-run row
+    counts plus the combined action counts (equality with the full
+    changeset asserted in tests/test_envelope.py)."""
     import tempfile
 
     from .merge import derive_changeset
     from ..sources.cd2_datasource import register
-    from ..sources.envelope import encode_envelope
+    from ..sources.envelope import decode_envelope, encode_envelope
 
     orders = load_table(spark, sf_dir, "orders")
-    wire = encode_envelope(
-        derive_changeset(orders).drop("o_orderdate"), key_cols=["o_orderkey"]
-    )
+    # written twice, once per part-file
+    changeset = derive_changeset(orders).localCheckpoint(eager=False)
+    wire = encode_envelope(changeset.drop("o_orderdate"), key_cols=["o_orderkey"])
     out = tempfile.mkdtemp(prefix="cda2_pystream_")
     ckpt = tempfile.mkdtemp(prefix="cda2_pystream_ckpt_")
     sink_dir = tempfile.mkdtemp(prefix="cda2_pystream_sink_")
@@ -435,12 +439,15 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         def run_once() -> int:
             # Memory sinks cannot recover a checkpoint; the parquet
             # sink can — which is also the honest replica-landing shape.
-            q = (
+            records = (
                 spark.readStream.format("cd2_envelope")
                 .option("path", f"{out}/part*/*.txt")
-                .option("table", "orders")
-                .option("keys", "o_orderkey")
                 .load()
+            )
+            q = (
+                decode_envelope(
+                    records, table="orders", key_cols=["o_orderkey"], record_col="value"
+                )
                 .writeStream.format("parquet")
                 .option("path", sink_dir)
                 .option("checkpointLocation", ckpt)

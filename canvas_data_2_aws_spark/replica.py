@@ -102,22 +102,17 @@ def commit(root: str, manifest: dict) -> None:
     os.replace(tmp, os.path.join(root, MANIFEST))
 
 
-def transact(
-    root: str,
-    frames: Mapping[str, tuple[str, DataFrame]],
-    *,
-    token: str | None = None,
-    batch_id: int | None = None,
-) -> dict[str, int]:
+def transact(root: str, frames: Mapping[str, tuple[str, DataFrame]]) -> dict[str, int]:
     """Commit ``frames`` (entry name -> (directory prefix, frame)) as the
     replica's next version, all or nothing, and return each entry's row
     count as observed on its write.
 
     Every frame is staged to ``{prefix}{version}`` before the manifest
-    swap. Entries not in ``frames`` keep their directories; ``token``
-    and ``batch_id`` are recorded when given. The superseded versions
-    are vacuumed after the swap."""
-    return _commit(root, frames, token, batch_id, rejects=())
+    swap. Entries not in ``frames`` keep their directories, and the
+    manifest's token and batch id are left as they are (only
+    :func:`sync` advances them). The superseded versions are vacuumed
+    after the swap."""
+    return _commit(root, frames, None, None, rejects=())
 
 
 def sync(

@@ -7,22 +7,19 @@ to one input partition**, so decode parallelism equals part count —
 the same parallelism contract as the reference's download pool
 (SURVEY §3.1) expressed through Spark's planner.
 
-This complements ``sources/envelope.py`` (the from_json codec over an
-already-loaded text DataFrame): the DataSource form is what a user
-points at a raw landing prefix without pre-reading anything, and it
-demonstrates the engine's extension point for formats Spark lacks.
-Schema is server-declared per table (never inferred), passed via
-options: ``.option("table", "orders").option("keys", "o_orderkey")``.
+The source only lists and splits: it yields each record line as it
+landed, in one ``value string`` column, and takes one option,
+``path``. Typing is ``sources/envelope.py::decode_envelope``'s job,
+the one decoder of the wire format, so a record decodes the same
+whichever way it was read:
 
-Rows are flattened to ``key cols + value cols + action`` — the shape
-the M1 merge consumes. Delete tombstones carry NULL value columns.
+    decode_envelope(spark.read.format("cd2_envelope").option("path", p)
+                    .load(), table, keys, record_col="value")
 """
 
 from __future__ import annotations
 
-import datetime as dt
 import glob
-import json
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -30,72 +27,28 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
-from pyspark.sql.types import (
-    BooleanType,
-    DateType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-from .envelope import envelope_schema
-
-
-def flattened_schema(table: str, key_cols: list[str]) -> StructType:
-    """key cols first, then value cols (nullable: a delete tombstone
-    carries none), then the action flag."""
-    env = envelope_schema(table, key_cols)
-    values = [StructField(f.name, f.dataType, True) for f in env["value"].dataType]
-    return StructType(
-        [*env["key"].dataType, *values, StructField("action", StringType(), False)]
-    )
-
-
-def _convert(value, data_type):
-    """JSON scalar → Python value matching the declared Spark type."""
-    if value is None:
-        return None
-    if isinstance(data_type, TimestampType):
-        return dt.datetime.fromisoformat(str(value).replace("T", " "))
-    if isinstance(data_type, DateType):
-        return dt.date.fromisoformat(str(value)[:10])
-    if isinstance(data_type, (LongType, IntegerType)):
-        return int(value)
-    if isinstance(data_type, DoubleType):
-        return float(value)
-    if isinstance(data_type, BooleanType):
-        return bool(value)
-    return str(value)
 
 
 class CD2EnvelopeDataSource(DataSource):
-    """``format("cd2_envelope")`` — options: path, table, keys (csv)."""
+    """``format("cd2_envelope")`` — one option: path."""
 
     @classmethod
     def name(cls) -> str:
         return "cd2_envelope"
 
-    def schema(self) -> StructType:
-        return flattened_schema(
-            self.options["table"], self.options["keys"].split(",")
-        )
+    def schema(self) -> str:
+        return "value string"
 
-    def reader(self, schema: StructType) -> "CD2EnvelopeReader":
-        return CD2EnvelopeReader(dict(self.options), schema)
+    def reader(self, schema) -> "CD2EnvelopeReader":
+        return CD2EnvelopeReader(self.options["path"])
 
-    def simpleStreamReader(self, schema: StructType) -> "CD2EnvelopeStreamReader":
-        return CD2EnvelopeStreamReader(dict(self.options), schema)
+    def simpleStreamReader(self, schema) -> "CD2EnvelopeStreamReader":
+        return CD2EnvelopeStreamReader(self.options["path"])
 
 
 class CD2EnvelopeReader(DataSourceReader):
-    def __init__(self, options: dict, schema: StructType) -> None:
-        self._path = options["path"]
-        self._schema = schema
-        self._key_cols = options["keys"].split(",")
+    def __init__(self, path: str) -> None:
+        self._path = path
 
     def partitions(self):
         # One part-file = one partition = one decode task (header note).
@@ -105,29 +58,18 @@ class CD2EnvelopeReader(DataSourceReader):
     def read(self, partition):
         if partition.value is None:
             return
-        yield from _parse_file(partition.value, self._schema, self._key_cols)
+        yield from _lines(partition.value)
 
 
-def _parse_file(path: str, schema: StructType, key_cols: list[str]):
-    """Decode one JSONL part-file into flattened typed tuples. An
-    undecodable line (malformed JSON, missing meta/action, a value that
-    does not convert) fails the task, like the S4 schema gate."""
-    fields = schema.fields[:-1]  # all but the action flag
+def _lines(path: str):
+    """One part-file's non-blank record lines, as 1-tuples. A malformed
+    line is yielded like any other: it decodes to a null key, which the
+    replica writers refuse."""
     with open(path, encoding="utf-8") as fh:
         for line in fh:
             line = line.strip()
-            if not line:
-                continue
-            rec = json.loads(line)
-            key = rec.get("key") or {}
-            val = rec.get("value") or {}
-            yield tuple(
-                _convert(
-                    key.get(f.name) if f.name in key_cols else val.get(f.name),
-                    f.dataType,
-                )
-                for f in fields
-            ) + (rec["meta"]["action"],)
+            if line:
+                yield (line,)
 
 
 def _list_parts(path: str) -> list[str]:
@@ -146,10 +88,8 @@ class CD2EnvelopeStreamReader(SimpleDataSourceStreamReader):
     transactionally with the merge (SURVEY §3.1).
     """
 
-    def __init__(self, options: dict, schema: StructType) -> None:
-        self._path = options["path"]
-        self._schema = schema
-        self._key_cols = options["keys"].split(",")
+    def __init__(self, path: str) -> None:
+        self._path = path
 
     def initialOffset(self) -> dict:
         return {"consumed": 0}
@@ -159,8 +99,7 @@ class CD2EnvelopeStreamReader(SimpleDataSourceStreamReader):
         n = start["consumed"]
         if n >= len(files):
             return iter([]), {"consumed": n}
-        rows = list(_parse_file(files[n], self._schema, self._key_cols))
-        return iter(rows), {"consumed": n + 1}
+        return iter(list(_lines(files[n]))), {"consumed": n + 1}
 
     def commit(self, end: dict) -> None:
         pass  # nothing to clean up: parts are immutable landed files

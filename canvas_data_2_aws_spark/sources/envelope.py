@@ -71,6 +71,10 @@ def decode_envelope(
 ) -> DataFrame:
     """Parse envelope JSONL into typed flat columns + ``action``.
 
+    This is the only decoder of the wire format: ``syncdb``, the
+    streams and the ``cd2_envelope`` DataSource (whose rows are the raw
+    record lines, ``record_col="value"``) all type records here.
+
     Value-type drift and unknown fields are not refused yet (ROADMAP.md,
     "Refuse schema drift"): ``from_json`` turns a value that does not
     parse as its declared type into null and drops a field the schema

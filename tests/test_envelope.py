@@ -80,9 +80,11 @@ def test_malformed_records_surface_as_null_keys(spark):
 
 
 def test_python_datasource_equals_from_json_codec(spark, sf_dir):
-    """format('cd2_envelope') must yield exactly the rows the from_json
-    codec yields from the same JSONL files, with one input partition
-    per part-file."""
+    """format('cd2_envelope') + decode_envelope must yield exactly the
+    rows read_changeset_jsonl yields from the same JSONL files, on every
+    column and for value-drift lines too (one codec types both), with
+    one input partition per part-file."""
+    import os
     import shutil
     import tempfile
 
@@ -92,39 +94,48 @@ def test_python_datasource_equals_from_json_codec(spark, sf_dir):
     from canvas_data_2_aws_spark.session import load_table
     from canvas_data_2_aws_spark.sources.cd2_datasource import register
     from canvas_data_2_aws_spark.sources.envelope import (
+        decode_envelope,
         encode_envelope,
         read_changeset_jsonl,
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    wire = encode_envelope(
-        derive_changeset(orders).drop("o_orderdate"), key_cols=["o_orderkey"]
-    )
+    changeset = derive_changeset(orders).localCheckpoint(eager=False)
+    wire = encode_envelope(changeset, key_cols=["o_orderkey"])
+    drift = [
+        '{"key": {"o_orderkey": -1}, "value": {"o_custkey": 3.7}, "meta": {"action": "U", "ts": 0}}',
+        '{"key": {"o_orderkey": -2}, "value": {"o_custkey": "12"}, "meta": {"action": "U", "ts": 0}}',
+        '{"key": {"o_orderkey": -3}, "value": {"o_totalprice": "2.5"}, "meta": {"action": "U", "ts": 0}}',
+    ]
     out = tempfile.mkdtemp(prefix="cda2_pysrc_t_")
     try:
         for i in range(3):
             wire.where(F.crc32("record") % 3 == i).coalesce(1).write.mode(
                 "overwrite"
             ).text(f"{out}/part{i}")
+        os.mkdir(f"{out}/part3")
+        with open(f"{out}/part3/drift.txt", "w", encoding="utf-8") as fh:
+            fh.write("\n".join(drift) + "\n")
         register(spark)
-        via_source = (
-            spark.read.format("cd2_envelope")
-            .option("path", f"{out}/part*/*.txt")
-            .option("table", "orders")
-            .option("keys", "o_orderkey")
-            .load()
+        records = (
+            spark.read.format("cd2_envelope").option("path", f"{out}/part*/*.txt").load()
         )
-        assert via_source.rdd.getNumPartitions() == 3
-        cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-                "o_orderpriority", "action"]
-        got = {tuple(r) for r in via_source.select(*cols).collect()}
-        want = {
+        assert records.schema.simpleString() == "struct<value:string>"
+        assert records.rdd.getNumPartitions() == 4
+        via_source = decode_envelope(
+            records, table="orders", key_cols=["o_orderkey"], record_col="value"
+        )
+        got = sorted(tuple(r) for r in via_source.collect())
+        want = sorted(
             tuple(r)
             for r in read_changeset_jsonl(
                 spark, f"{out}/part*/*.txt", table="orders", key_cols=["o_orderkey"]
-            ).select(*cols).collect()
-        }
-        assert got == want and len(want) > 0
+            ).collect()
+        )
+        assert got == want
+        assert len(want) == changeset.count() + len(drift)
+        assert via_source.columns == [*orders.columns, "action"]
+        assert {r[0] for r in got} >= {-1, -2, -3}
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -152,27 +163,40 @@ def test_streaming_python_source_resumes_from_checkpoint(spark, sf_dir):
     assert total == expected
 
 
-def test_python_datasource_fails_on_malformed(spark, tmp_path):
-    """A corrupt line among good ones fails the read: the source never
-    skips a record."""
+def test_python_datasource_malformed_line_refused_by_sink(spark, sf_dir, tmp_path):
+    """The source never fails and never skips a line: a malformed line
+    between good ones reaches the writer as a null key (no JSON) or a
+    missing action (no meta block), and ``StreamingMergeSink.apply_batch``
+    refuses the batch with the manifest left byte-identical, as
+    ``syncdb`` does."""
+    import os
+
     import pytest
 
+    from canvas_data_2_aws_spark import replica
+    from canvas_data_2_aws_spark.session import load_table
     from canvas_data_2_aws_spark.sources.cd2_datasource import register
+    from canvas_data_2_aws_spark.streaming.merge_sink import StreamingMergeSink
 
     good = '{"key": {"o_orderkey": %d}, "value": {"o_custkey": 7, "o_orderstatus": "O", "o_totalprice": 1.5, "o_orderdate": "1995-01-01 00:00:00", "o_orderpriority": "1-URGENT"}, "meta": {"action": "U", "ts": 0}}'
+    sink = StreamingMergeSink(
+        spark, str(tmp_path / "replica"), keys=["o_orderkey"], compact_by=["o_orderkey"]
+    )
+    sink.bootstrap(load_table(spark, sf_dir, "orders").limit(10))
+    manifest = os.path.join(sink.table_dir, replica.MANIFEST)
+    with open(manifest, "rb") as fh:
+        before = fh.read()
     register(spark)
-    for i, (bad, error) in enumerate(
-        [("{not json at all", "JSONDecodeError"), ('{"key": {}, "value": {}}', "KeyError")]
-    ):
+    for i, bad in enumerate(["{not json at all", '{"key": {"o_orderkey": 3}, "value": {}}']):
         part = tmp_path / f"parts{i}"
         part.mkdir()
         (part / "p0.txt").write_text("\n".join([good % 1, bad, good % 2]) + "\n")
-        with pytest.raises(Exception, match=error):
-            (
-                spark.read.format("cd2_envelope")
-                .option("path", f"{part}/*.txt")
-                .option("table", "orders")
-                .option("keys", "o_orderkey")
-                .load()
-                .collect()
-            )
+        records = spark.read.format("cd2_envelope").option("path", str(part)).load()
+        assert [r.value for r in records.collect()] == [good % 1, bad, good % 2]
+        changes = decode_envelope(
+            records, table="orders", key_cols=["o_orderkey"], record_col="value"
+        )
+        with pytest.raises(replica.Rejected, match="refused 1 malformed"):
+            sink.apply_batch(changes, i)
+        with open(manifest, "rb") as fh:
+            assert fh.read() == before
