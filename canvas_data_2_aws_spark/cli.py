@@ -102,35 +102,16 @@ def cmd_validate(args) -> int:
     """
     from pyspark.sql import functions as F
 
+    from .functions.numeric import row_digest
+
     spark = session.get_spark(app="cda2-validate")
     replica_df = replica.read(spark, args.replica, args.table)
     reference = session.load_table(spark, args.source_dir, args.table)
     key = args.key
 
     def digest(df):
-        # Engine-neutral canonical field per dtype (same recipe as the
-        # graded validate_table_checksum): doubles as integer cents,
-        # dates/timestamps as ISO strings — raw double/timestamp string
-        # forms are engine-dependent and must never enter a digest, but
-        # silently excluding those columns would let corruption of e.g.
-        # o_totalprice or o_orderdate pass the audit.
-        parts = []
-        for c, t in sorted(df.dtypes):
-            col = F.col(c)
-            if t in ("string", "int", "bigint", "smallint", "tinyint", "boolean"):
-                parts.append(col.cast("string"))
-            elif t in ("double", "float"):
-                parts.append(F.round(col * 100, 0).cast("long").cast("string"))
-            elif t == "date":
-                parts.append(col.cast("string"))
-            elif t.startswith("timestamp"):
-                parts.append(F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-            elif t.startswith("decimal"):
-                parts.append(col.cast("string"))
-        row = F.concat_ws("|", *parts)
-        fold = F.conv(F.substring(F.md5(row), 1, 8), 16, 10).cast("long")
         return df.agg(
-            F.sum(fold).alias("checksum"),
+            F.sum(row_digest(df, sorted(df.columns))).alias("checksum"),
             F.count("*").alias("n"),
             F.countDistinct(key).alias("n_keys"),
         ).first()

@@ -18,7 +18,9 @@ either engine and both recover the exact mathematical value.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def dec6(expr: str) -> Column:
@@ -34,6 +36,33 @@ def dsum(expr: str, alias: str) -> Column:
 def dsum_col(col: Column, alias: str) -> Column:
     """Deterministic SUM of a double Column (DataFrame form)."""
     return F.sum(col.cast("decimal(18,6)")).cast("double").alias(alias)
+
+
+def row_digest(df: DataFrame, cols: Sequence[str]) -> Column:
+    """Engine-neutral content digest of one row: md5 over the
+    ``|``-joined canonical fields of ``cols`` (in that order), folded to
+    its first 32 bits as a long. ``SUM`` of it is an order-insensitive
+    table checksum that any engine reproduces.
+
+    Each field's canonical form follows its dtype: doubles as integer
+    cents, timestamps as ISO strings, the other scalar types as their
+    string cast. Raw double/timestamp string forms are engine-dependent
+    and must never enter a digest, but silently excluding those columns
+    would let corruption of e.g. o_totalprice or o_orderdate pass."""
+    dtypes = dict(df.dtypes)
+    parts = []
+    for c in cols:
+        t, col = dtypes[c], F.col(c)
+        if t in ("double", "float"):
+            parts.append(F.round(col * 100, 0).cast("long").cast("string"))
+        elif t.startswith("timestamp"):
+            parts.append(F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
+        elif t.startswith("decimal") or t in (
+            "string", "int", "bigint", "smallint", "tinyint", "boolean", "date"
+        ):
+            parts.append(col.cast("string"))
+    row = F.concat_ws("|", *parts)
+    return F.conv(F.substring(F.md5(row), 1, 8), 16, 10).cast("long")
 
 
 def davg(expr: str, alias: str) -> Column:

@@ -13,9 +13,13 @@ the join-based plan:
 
 At production scale the same semantics are one ``MERGE INTO`` on
 Iceberg/Delta; the plan below is what those engines execute underneath
-(minus their transactional commit). Both sides shuffle once on the PK;
-with the base bucketed by PK at rest (SCALE.md) only the (small)
-changeset shuffles. Malformed change records are counted over the
+(minus their transactional commit). On a ~1 % ``syncdb`` changeset
+the anti-join plans as a ``BroadcastHashJoin LeftAnti`` on the
+compacted (checkpointed) keys: the keys broadcast and the base is
+scanned once, unshuffled. A changeset too large to broadcast shuffles,
+and then the base shuffles on the PK too, unless it is bucketed by PK
+at rest (``snapshot_load_bucketed``, SCALE.md), which keeps its side
+shuffle-free. Malformed change records are counted over the
 compaction's own window (:func:`observe_rejects`), so a writer can
 refuse them without an extra job. A (group → n, total) view over the
 table is maintained from the same changeset by :func:`fold_view`.

@@ -2443,7 +2443,11 @@ def sample_coordinated_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager measured slightly negative here (3 serialized build jobs
     # on the critical path), lazy benched neutral-to-better over 5
     # interleaved pairs. All three frames are keys-only projections
-    # (the guide §8 lightweight-proxy rule), bounded at any scale.
+    # (the guide §8 lightweight-proxy rule), but only sc is dim-sized:
+    # so and sl are fact-key-scale (one key per sampled order and per
+    # sampled line item, 1/8 of each table under the md5 < "20" rule).
+    # Their checkpoint blocks are unreplicated executor storage that
+    # grows with the fact tables, and an executor loss loses them.
     sc = (
         cust.where(
             F.substring(F.md5(F.col("c_custkey").cast("string")), 1, 2) < "20"

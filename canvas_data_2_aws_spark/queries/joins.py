@@ -538,15 +538,15 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crossJoin sites) and occ THREE times (one broadcast per hash
     # probe) — unmaterialized, every consumer re-ran the customer
     # scan + filter, 18 parquet scans in one plan. Both frames are
-    # dim-key-sized (|build| and ≤ 3·|build| longs), so eager local
-    # checkpoints bound them at any corpus scale; the after-plan reads
-    # 2 scans (orders + customer once). Locally neutral (pairs within
-    # ±0.1 s at sf0.1 — the duplicated subtrees are dim-cheap here);
-    # at warehouse scale the dim re-scans are the real cost.
+    # dim-key-sized (|build| and ≤ 3·|build| longs). LAZY local
+    # checkpoints: the first consumer materializes each frame and the
+    # rest read its blocks, so the executed plan reads 2 scans (orders
+    # + customer once) and building the query (explain, plan audits)
+    # runs no job.
     build = (
         customer.where(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     # GREATEST(·, 1): an empty build segment would size m_bits = 0 and
     # every position would compute x % 0 — NULL in Spark, error in
@@ -580,7 +580,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(mm))
         .select(pos(F.col("j"), "c_custkey").alias("pos"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     probe = orders.crossJoin(F.broadcast(mm))
     for j in range(_BLOOM_K):

@@ -5,7 +5,8 @@ query (FIXTURES.md — no changeset file exists on disk): updates for
 keys %10==0 (excluding delete keys), deletes for %97==0, plus 100
 fresh inserts cloned from the smallest keys. Both the Spark plan and
 the DuckDB oracle build the identical changeset, so the merged replica
-hash-matches.
+hash-matches. Each engine spells it once (``derive_changeset``,
+``_CHANGESET_CTES``), and the oracles merge it through one ``_merged``.
 """
 
 from __future__ import annotations
@@ -48,17 +49,20 @@ changeset AS (
   SELECT * FROM ins
 )"""
 
-_MERGE_ORACLE = f"""
-WITH {_CHANGESET_CTES}
-SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-       o_orderpriority
-FROM orders
-WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changeset)
-UNION ALL
-SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-       o_orderpriority
-FROM changeset WHERE action = 'U'
-"""
+
+def _merged(changes: str = "changeset") -> str:
+    """The merge step (M1) as the DuckDB ``merged`` CTE: the ``orders``
+    rows whose key ``changes`` does not touch, then its ``U`` rows."""
+    cols = ", ".join(_ORDER_COLS)
+    return f"""merged AS (
+  SELECT {cols} FROM orders
+  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM {changes})
+  UNION ALL
+  SELECT {cols} FROM {changes} WHERE action = 'U'
+)"""
+
+
+_MERGE_ORACLE = f"WITH {_CHANGESET_CTES},\n{_merged()}\nSELECT * FROM merged"
 
 
 def derive_changeset(orders: DataFrame) -> DataFrame:
@@ -117,13 +121,11 @@ def merge_bucketed_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plan pinned in tests/test_bucketing.py). Identical oracle to
     merge_upsert_apply: the layout is proven LOSSLESS through the
     graded gate, not just plan-shaped."""
-    import os
     import shutil
     import tempfile
+    import uuid
 
     from ..operators.merge import snapshot_load_bucketed
-
-    import uuid
 
     orders = load_table(spark, sf_dir, "orders")
     path = tempfile.mkdtemp(prefix="cda2_bmerge_")
@@ -140,14 +142,8 @@ def merge_bucketed_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         # read twice by apply_changeset
         changeset = derive_changeset(orders).localCheckpoint(eager=False)
         merged = apply_changeset(base, changeset, keys=["o_orderkey"])
-        # Persist the merged result to parquet and re-read, so the
-        # returned frame outlives the temp-table drop WITHOUT a
-        # driver-sized collect (the graded artifact now survives at any
-        # scale; production callers keep the lazy apply_changeset).
-        out = os.path.join(path, "_merged_out")
-        merged.write.mode("overwrite").parquet(out)
-        reread = spark.read.parquet(out).localCheckpoint(eager=True)
-        return reread
+        # outlives the temp-table drop without a driver-sized collect
+        return materialize_outliving(merged, path)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         shutil.rmtree(path, ignore_errors=True)
@@ -188,30 +184,15 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- S2: JSONL envelope codec round-trip ---------------------------------------
 
-_ENVELOPE_ORACLE = """
-WITH mx AS (SELECT MAX(o_orderkey) AS m FROM orders),
-ins AS (
-  SELECT mx.m + ROW_NUMBER() OVER (ORDER BY s.o_orderkey) AS o_orderkey,
-         s.o_custkey, s.o_orderstatus, s.o_totalprice, s.o_orderdate,
-         s.o_orderpriority, 'U' AS action
-  FROM (SELECT * FROM orders ORDER BY o_orderkey LIMIT 100) s, mx
-),
-changeset AS (
-  SELECT o_orderkey, o_custkey, 'X' AS o_orderstatus,
-         o_totalprice + 1.0 AS o_totalprice, o_orderdate, o_orderpriority,
-         'U' AS action
-  FROM orders WHERE o_orderkey % 10 = 0 AND o_orderkey % 97 <> 0
-  UNION ALL
-  SELECT o_orderkey, CAST(NULL AS BIGINT) AS o_custkey,
-         CAST(NULL AS VARCHAR) AS o_orderstatus,
-         CAST(NULL AS DOUBLE) AS o_totalprice,
-         CAST(NULL AS TIMESTAMP) AS o_orderdate,
-         CAST(NULL AS VARCHAR) AS o_orderpriority, 'D' AS action
-  FROM orders WHERE o_orderkey % 97 = 0
-  UNION ALL
-  SELECT * FROM ins
-)
-SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority,
+# The changeset as the codec round-trips it: a delete is a key-only
+# tombstone, so its value columns decode to NULL.
+_ENVELOPE_ORACLE = f"""
+WITH {_CHANGESET_CTES}
+SELECT o_orderkey,
+       CASE WHEN action = 'U' THEN o_custkey END AS o_custkey,
+       CASE WHEN action = 'U' THEN o_orderstatus END AS o_orderstatus,
+       CASE WHEN action = 'U' THEN o_totalprice END AS o_totalprice,
+       CASE WHEN action = 'U' THEN o_orderpriority END AS o_orderpriority,
        action
 FROM changeset
 """
@@ -251,13 +232,7 @@ def jsonl_envelope_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scales with |changeset|, not |base|.
 _IVM_ORACLE = f"""
 WITH {_CHANGESET_CTES},
-merged AS (
-  SELECT o_orderkey, o_orderstatus, o_totalprice
-  FROM orders WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changeset)
-  UNION ALL
-  SELECT o_orderkey, o_orderstatus, o_totalprice
-  FROM changeset WHERE action = 'U'
-)
+{_merged()}
 SELECT o_orderstatus, COUNT(*) AS n_orders,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
 FROM merged GROUP BY o_orderstatus
@@ -303,13 +278,7 @@ def merge_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SNAPDIFF_ORACLE = f"""
 WITH {_CHANGESET_CTES},
-merged AS (
-  SELECT o_orderkey, o_orderstatus, o_totalprice
-  FROM orders WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changeset)
-  UNION ALL
-  SELECT o_orderkey, o_orderstatus, o_totalprice
-  FROM changeset WHERE action = 'U'
-)
+{_merged()}
 SELECT CASE
          WHEN b.o_orderkey IS NULL THEN 'added'
          WHEN m.o_orderkey IS NULL THEN 'removed'
@@ -542,29 +511,17 @@ def merge_tombstone_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Replica state AS OF a cutoff: apply only the changes whose change
 # time (here the row's order date) is ≤ the horizon — the
 # time-travel/PITR read a log-structured replica serves without
-# snapshots. Update/delete log only (fresh inserts carry no
-# pre-existing key to travel over).
-_TIME_TRAVEL_ORACLE = """
-WITH h AS (SELECT MAX(o_orderdate) - INTERVAL 365 DAY AS cutoff FROM orders),
-changes AS (
-  SELECT o_orderkey, o_custkey, 'X' AS o_orderstatus,
-         o_totalprice + 1.0 AS o_totalprice, o_orderdate, o_orderpriority,
-         'U' AS action
-  FROM orders WHERE o_orderkey % 10 = 0 AND o_orderkey % 97 <> 0
-  UNION ALL
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-         o_orderpriority, 'D' AS action
-  FROM orders WHERE o_orderkey % 97 = 0
+# snapshots. Update/delete log only: ``o_orderkey <= m`` drops the fresh
+# inserts, which carry no pre-existing key to travel over.
+_TIME_TRAVEL_ORACLE = f"""
+WITH {_CHANGESET_CTES},
+h AS (SELECT MAX(o_orderdate) - INTERVAL 365 DAY AS cutoff FROM orders),
+applied AS (
+  SELECT c.* FROM changeset c, h, mx
+  WHERE c.o_orderdate <= h.cutoff AND c.o_orderkey <= mx.m
 ),
-applied AS (SELECT c.* FROM changes c, h WHERE c.o_orderdate <= h.cutoff)
-SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-       o_orderpriority
-FROM orders
-WHERE o_orderkey NOT IN (SELECT o_orderkey FROM applied)
-UNION ALL
-SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-       o_orderpriority
-FROM applied WHERE action = 'U'
+{_merged("applied")}
+SELECT * FROM merged
 """
 
 
@@ -572,27 +529,23 @@ FROM applied WHERE action = 'U'
 def merge_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AS-OF read: the replica with only the update/delete log up to
     the 365-day horizon applied (operators/merge.py plan, one keyed
-    anti-join + union). The cutoff is a 1-row broadcast; at scale the
-    change log is date-partitioned so the filter partition-prunes."""
+    anti-join + union). The log is ``derive_changeset`` without its
+    fresh inserts (keys above the base's max). The cutoff and max are
+    one 1-row broadcast; at scale the change log is date-partitioned
+    so the filter partition-prunes."""
     orders = load_table(spark, sf_dir, "orders")
-    key = F.col("o_orderkey")
-    updates = (
-        orders.where((key % 10 == 0) & (key % 97 != 0))
-        .withColumn("o_orderstatus", F.lit("X"))
-        .withColumn("o_totalprice", F.col("o_totalprice") + 1.0)
-        .withColumn("action", F.lit("U"))
-    )
-    deletes = orders.where(key % 97 == 0).withColumn("action", F.lit("D"))
-    changes = updates.select(*_ORDER_COLS, "action").unionByName(
-        deletes.select(*_ORDER_COLS, "action")
-    )
     h = orders.agg(
-        F.expr("MAX(o_orderdate) - INTERVAL 365 DAYS").alias("cutoff")
+        F.expr("MAX(o_orderdate) - INTERVAL 365 DAYS").alias("cutoff"),
+        F.max("o_orderkey").alias("m"),
     )
     applied = (
-        changes.crossJoin(F.broadcast(h))
-        .where(F.col("o_orderdate") <= F.col("cutoff"))
-        .drop("cutoff")
+        derive_changeset(orders)
+        .crossJoin(F.broadcast(h))
+        .where(
+            (F.col("o_orderdate") <= F.col("cutoff"))
+            & (F.col("o_orderkey") <= F.col("m"))
+        )
+        .drop("cutoff", "m")
     )
     return apply_changeset(orders, applied, keys=["o_orderkey"])
 
@@ -603,28 +556,15 @@ def merge_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # changes hit existing keys vs arrive fresh, and the net row delta
 # the merge will produce — the numbers an operator checks before
 # applying a batch. Pure integer counts.
-_CHANGESET_STATS_ORACLE = """
-WITH mx AS (SELECT MAX(o_orderkey) AS m FROM orders),
-ins AS (
-  SELECT mx.m + ROW_NUMBER() OVER (ORDER BY s.o_orderkey) AS o_orderkey,
-         'U' AS action
-  FROM (SELECT * FROM orders ORDER BY o_orderkey LIMIT 100) s, mx
-),
-changes AS (
-  SELECT o_orderkey, 'U' AS action FROM orders
-  WHERE o_orderkey % 10 = 0 AND o_orderkey % 97 <> 0
-  UNION ALL
-  SELECT o_orderkey, 'D' AS action FROM orders WHERE o_orderkey % 97 = 0
-  UNION ALL
-  SELECT o_orderkey, action FROM ins
-)
+_CHANGESET_STATS_ORACLE = f"""
+WITH {_CHANGESET_CTES}
 SELECT c.action,
        CAST(COUNT(*) AS BIGINT) AS n_changes,
        CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_existing_keys,
        CAST(COUNT(*) - COUNT(o.o_orderkey) AS BIGINT) AS n_new_keys,
        CAST(CASE WHEN c.action = 'U' THEN COUNT(*) - COUNT(o.o_orderkey)
                  ELSE -COUNT(o.o_orderkey) END AS BIGINT) AS net_row_delta
-FROM changes c LEFT JOIN orders o ON o.o_orderkey = c.o_orderkey
+FROM changeset c LEFT JOIN orders o ON o.o_orderkey = c.o_orderkey
 GROUP BY c.action
 """
 
@@ -664,16 +604,7 @@ def merge_changeset_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # OLD row's month to the touched set — same derivation, both sides.
 _DPO_ORACLE = f"""
 WITH {_CHANGESET_CTES},
-merged AS (
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-         o_orderpriority
-  FROM orders
-  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changeset)
-  UNION ALL
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-         o_orderpriority
-  FROM changeset WHERE action = 'U'
-)
+{_merged()}
 SELECT strftime(o_orderdate, '%Y-%m') AS om,
        COUNT(*) AS n_rows,
        COUNT(DISTINCT o_orderkey) AS n_keys,
@@ -869,13 +800,7 @@ def merge_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of the IVM algebra.
 _IVM_JOIN_ORACLE = f"""
 WITH {_CHANGESET_CTES},
-merged AS (
-  SELECT o_orderkey, o_custkey, o_totalprice
-  FROM orders WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changeset)
-  UNION ALL
-  SELECT o_orderkey, o_custkey, o_totalprice
-  FROM changeset WHERE action = 'U'
-)
+{_merged()}
 SELECT c.c_mktsegment,
        CAST(COUNT(*) AS BIGINT) AS n_orders,
        CAST(SUM(CAST(m.o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.numeric import dsum, oracle_dsum
+from ..functions.numeric import dsum, oracle_dsum, row_digest
 from ..registry import graded
 from ..session import load_table
 
@@ -95,6 +95,8 @@ def validate_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # string forms are engine-dependent), folded to a 32-bit int and SUMmed.
 # Addition is commutative → order-insensitive; md5 is identical
 # everywhere → the same table yields the same checksum in any engine.
+# Spark side: functions.numeric.row_digest over these columns, in order.
+_DIGEST_COLS = ("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
 _CHECKSUM_ORACLE = """
 SELECT CAST(SUM(CAST(concat('0x', substring(md5(
          concat_ws('|', CAST(o_orderkey AS VARCHAR), o_orderstatus,
@@ -111,16 +113,9 @@ def validate_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive content checksum — replica≡source comparison
     without data movement: each side computes one number."""
     o = load_table(spark, sf_dir, "orders")
-    canon = F.concat_ws(
-        "|",
-        F.col("o_orderkey").cast("string"),
-        F.col("o_orderstatus"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").cast("string"),
-        F.col("o_orderpriority"),
-    )
-    digest = F.conv(F.substring(F.md5(canon), 1, 8), 16, 10).cast("long")
     return o.agg(
-        F.sum(digest).alias("checksum"), F.count("*").alias("n_rows")
+        F.sum(row_digest(o, _DIGEST_COLS)).alias("checksum"),
+        F.count("*").alias("n_rows"),
     )
 
 
@@ -152,19 +147,11 @@ def validate_merkle_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the PK bucketing of SCALE.md §1, so a repair re-reads one
     bucket."""
     o = load_table(spark, sf_dir, "orders")
-    row = F.concat_ws(
-        "|",
-        F.col("o_orderkey").cast("string"),
-        "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").cast("string"),
-        "o_orderpriority",
-    )
-    fold = F.conv(F.substring(F.md5(row), 1, 8), 16, 10).cast("long")
     return (
         o.groupBy(F.expr("o_orderkey DIV 1024").alias("range_id"))
         .agg(
             F.count("*").alias("n_rows"),
-            F.sum(fold).alias("range_checksum"),
+            F.sum(row_digest(o, _DIGEST_COLS)).alias("range_checksum"),
         )
     )
 

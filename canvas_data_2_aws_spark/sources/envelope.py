@@ -67,7 +67,6 @@ def decode_envelope(
     key_cols: list[str],
     record_col: str = "record",
     ts_col: str | None = None,
-    passthrough: list[str] | None = None,
 ) -> DataFrame:
     """Parse envelope JSONL into typed flat columns + ``action``.
 
@@ -84,11 +83,11 @@ def decode_envelope(
     ``ts_col`` surfaces ``meta.ts`` under that name (aliased, never
     bare ``ts`` — value blocks may carry their own ``ts`` column) so
     callers can compact multi-change-per-PK batches by arrival time
-    (M3). ``passthrough`` forwards caller-added columns (e.g. a file
-    sequence number) unchanged.
+    (M3). Every input column other than ``record_col`` (e.g. a file
+    sequence number) is forwarded unchanged.
     """
     schema = envelope_schema(table, key_cols)
-    extra = list(passthrough or [])
+    extra = [c for c in records.columns if c != record_col]
     ts = [] if ts_col is None else [F.col("env.meta.ts").alias(ts_col)]
     return records.select(
         *extra, F.from_json(F.col(record_col), schema).alias("env")
@@ -113,9 +112,12 @@ def read_changeset_jsonl(
     part file wins, and within a file a later line wins. A bare
     ``monotonically_increasing_id`` would follow Spark's split packing,
     which orders splits by size, not by file.
+
+    A directory is listed recursively, so the part subdirectories that
+    ``.write.text(f"{path}/part{i}")`` lays down are all read; without
+    it Spark lists no file below a subdirectory that is not ``k=v``.
     """
-    records = spark.read.text(path)
-    passthrough = []
+    records = spark.read.option("recursiveFileLookup", "true").text(path)
     if seq_col is not None:
         records = records.withColumn(
             seq_col,
@@ -125,12 +127,4 @@ def read_changeset_jsonl(
                 F.monotonically_increasing_id(),
             ),
         )
-        passthrough = [seq_col]
-    return decode_envelope(
-        records,
-        table,
-        key_cols,
-        record_col="value",
-        ts_col=ts_col,
-        passthrough=passthrough,
-    )
+    return decode_envelope(records, table, key_cols, record_col="value", ts_col=ts_col)

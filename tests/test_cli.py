@@ -612,6 +612,25 @@ def test_syncdb_ties_resolve_in_file_order(spark, sf_dir, tmp_path):
     assert merged.count() == len(rows)
 
 
+def test_syncdb_reads_changes_in_part_subdirectories(spark, sf_dir, tmp_path):
+    """A changeset directory with one subdirectory per part, the layout
+    ``encode_envelope`` + ``.write.text(f"{out}/part{i}")`` lays down,
+    is read in full: the delete in each part is applied."""
+    replica = str(tmp_path / "parts_replica")
+    assert cli.main(["initdb", "--table", "orders", "--source-dir", sf_dir,
+                     "--replica", replica]) == 0
+    before = spark.read.parquet(replica_mod.table_dir(replica, "orders")).count()
+    changes = tmp_path / "ch"
+    for i, key in enumerate([1, 2]):
+        (changes / f"part{i}").mkdir(parents=True)
+        _delete_changeset(changes / f"part{i}", "part-00000.txt", "o_orderkey", [key])
+    assert cli.main(["syncdb", "--table", "orders", "--changes", str(changes),
+                     "--key", "o_orderkey", "--replica", replica]) == 0
+    after = spark.read.parquet(replica_mod.table_dir(replica, "orders"))
+    assert after.where(F.col("o_orderkey").isin(1, 2)).count() == 0
+    assert after.count() == before - 2
+
+
 def _refused_sync_leaves_manifest(sf_dir, tmp_path, bad_line):
     """Sync a changeset holding one good delete and ``bad_line``; the
     sync must exit non-zero and leave the manifest byte-identical."""

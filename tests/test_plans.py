@@ -174,7 +174,7 @@ _NESTED_LOOP_OK = {
     "analytics_pareto_share",  # 1-row (n_cust, total) broadcast + rank offsets
     "vector_recall_eval",  # exact-KNN side: deliberate brute-force baseline
     "text_corpus_drift",  # 1-row (na, nb) totals broadcast
-    "merge_time_travel",  # 1-row cutoff broadcast
+    "merge_time_travel",  # 1-row (cutoff, max-PK) broadcast + changeset derivation
     # round-8 addition, same constant-side shape:
     "match_fellegi_sunter",  # 1-row m/u weight census broadcast
     # round-7 additions, same constant-side shapes:
