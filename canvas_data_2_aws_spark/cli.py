@@ -15,7 +15,6 @@ verbs; here they run on Spark.
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 
 from . import registry, replica, session
@@ -24,7 +23,7 @@ from .sources.envelope import read_changeset_jsonl
 
 def cmd_initdb(args) -> int:
     spark = session.get_spark(app="cda2-initdb")
-    df = session.load_table(spark, args.source_dir, args.table)
+    df = session.sized(session.load_table(spark, args.source_dir, args.table))
     rows = replica.transact(args.replica, {args.table: (f"{args.table}__v", df)})
     print(f"initdb: {args.table} bootstrapped with {rows[args.table]} rows")
     return 0
@@ -136,21 +135,20 @@ def cmd_optimize(args) -> int:
     Clustering on the key keeps footer min/max selective, so post-
     compaction scans skip files on PK predicates. The rewrite commits
     through the same replica transaction as ``syncdb``, so a crash
-    mid-rewrite leaves the prior layout readable.
+    mid-rewrite leaves the prior layout readable. The file count is
+    ``session.partitions_for`` the table's bytes with ``--target-mb``
+    as the divisor, and each range partition is written as one file.
     At 100 TB the same verb runs per partition off the manifest bins
     (`layout_compaction_bins`)."""
     import glob
 
-    spark = session.get_spark(app="cda2-optimize")
-    root = args.replica
-    path = replica.table_dir(root, args.table)
-    files_before = glob.glob(f"{path}/part-*")
-    bytes_total = sum(os.path.getsize(f) for f in files_before)
-    target = max(1, round(bytes_total / (args.target_mb * 1024 * 1024)) or 1)
-
     from pyspark.sql import functions as F
 
+    spark = session.get_spark(app="cda2-optimize")
+    root = args.replica
+    files_before = glob.glob(f"{replica.table_dir(root, args.table)}/part-*")
     df = replica.read(spark, root, args.table)
+    target = session.partitions_for(df, args.target_mb << 20)
     clustered = df.repartitionByRange(target, F.col(args.key)).sortWithinPartitions(
         args.key
     )
@@ -158,8 +156,7 @@ def cmd_optimize(args) -> int:
     files_after = glob.glob(f"{replica.table_dir(root, args.table)}/part-*")
     print(
         f"optimize: {args.table} rewrote {len(files_before)} files "
-        f"({bytes_total >> 20} MiB) into {len(files_after)} "
-        f"PK-clustered files, {rows[args.table]} rows"
+        f"into {len(files_after)} PK-clustered files, {rows[args.table]} rows"
     )
     return 0
 
@@ -258,7 +255,11 @@ def main(argv: list[str] | None = None) -> int:
     p_opt.add_argument("--table", required=True)
     p_opt.add_argument("--replica", required=True)
     p_opt.add_argument("--key", required=True, help="clustering key column")
-    p_opt.add_argument("--target-mb", type=int, default=256)
+    p_opt.add_argument(
+        "--target-mb", type=int, default=256,
+        help="target file size: the table is rewritten as ceil(bytes / target)"
+        " PK-range files",
+    )
     p_opt.set_defaults(fn=cmd_optimize)
 
     p_list = sub.add_parser("list", help="list all graded queries")

@@ -13,14 +13,19 @@ the join-based plan:
 
 At production scale the same semantics are one ``MERGE INTO`` on
 Iceberg/Delta; the plan below is what those engines execute underneath
-(minus their transactional commit). On a ~1 % ``syncdb`` changeset
-the anti-join plans as a ``BroadcastHashJoin LeftAnti`` on the
-compacted (checkpointed) keys: the keys broadcast and the base is
-scanned once, unshuffled. A changeset too large to broadcast shuffles,
-and then the base shuffles on the PK too, unless it is bucketed by PK
-at rest (``snapshot_load_bucketed``, SCALE.md), which keeps its side
-shuffle-free. Malformed change records are counted over the
-compaction's own window (:func:`observe_rejects`), so a writer can
+(minus their transactional commit). The changeset shuffles into the
+compaction window only when ``session.partitions_for`` gives it more
+than one partition, that is above the split Spark's file scan would
+take for its bytes (4 MiB at the default ``openCostInBytes``): a
+smaller one, such as a ~1 % ``syncdb`` cycle or a micro-batch, is
+coalesced to one partition and compacted in one task with no Exchange.
+On a ~1 % changeset the anti-join plans as a ``BroadcastHashJoin
+LeftAnti`` on the compacted (checkpointed) keys: the keys broadcast and
+the base is scanned once, unshuffled. A changeset too large to
+broadcast shuffles, and then the base shuffles on the PK too, unless it
+is bucketed by PK at rest (``snapshot_load_bucketed``, SCALE.md), which
+keeps its side shuffle-free. Malformed change records are counted over
+the compaction's own window (:func:`observe_rejects`), so a writer can
 refuse them without an extra job. A (group → n, total) view over the
 table is maintained from the same changeset by :func:`fold_view`.
 """
@@ -30,6 +35,8 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Observation, Window, WindowSpec, functions as F
+
+from ..session import sized
 
 ACTION_UPSERT = "U"
 ACTION_DELETE = "D"
@@ -80,19 +87,26 @@ def observe_rejects(
     extra Spark job runs for it. ``replica.sync`` refuses the commit
     when it is non-zero.
 
+    ``changes`` is first coalesced to ``session.sized`` its estimated
+    bytes. Under one scan split (4 MiB at the default open cost) that
+    is one partition, which already satisfies the window's clustering,
+    so the compaction runs in one task with no Exchange; above it, the
+    changeset is hash-shuffled on the keys into the window.
+
     The records are counted after compaction, above its lazy
     checkpoint: an observation of the raw records would complete when
     the checkpoint is created, before an input that needs no shuffle
-    has been read, and would report 0. So each record carries its key's
-    count of malformed records, and the one record compaction keeps
-    per key carries it past the checkpoint."""
+    has been read, and would report 0. The coalesced changeset is
+    exactly such an input. So each record carries its key's count of
+    malformed records, and the one record compaction keeps per key
+    carries it past the checkpoint."""
     bad = ~F.coalesce(F.col("action").isin(ACTION_UPSERT, ACTION_DELETE), F.lit(False))
     for k in keys:
         bad = bad | F.col(k).isNull()
     whole_key = _latest_first(keys, order_by).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    flagged = changes.withColumn("_rejected", F.count_if(bad).over(whole_key))
+    flagged = sized(changes).withColumn("_rejected", F.count_if(bad).over(whole_key))
     obs = Observation()
     total = F.coalesce(F.sum("_rejected"), F.lit(0)).alias("rejected")
     return compact_changeset(flagged, keys, order_by).observe(obs, total), obs

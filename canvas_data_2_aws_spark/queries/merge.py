@@ -631,6 +631,9 @@ def merge_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     om = F.date_format("o_orderdate", "yyyy-MM").alias("om")
     tmp = tempfile.mkdtemp(prefix="cda2_dpo_")
+    # The partitioned table sits in its own subdirectory, so the result
+    # materialize_outliving writes under tmp is never in its partition scan.
+    table = os.path.join(tmp, "table")
     old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         # repartition on the partition key: one file per month instead
@@ -638,14 +641,14 @@ def merge_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # maintains
         orders.withColumn("om", om).repartition(F.col("om")).write.mode(
             "overwrite"
-        ).partitionBy("om").parquet(tmp)
+        ).partitionBy("om").parquet(table)
         # read three times: the month list, then twice by apply_changeset
         changeset = derive_changeset(orders).localCheckpoint(eager=False)
         months = [
             r.om for r in changeset.select(om).distinct().collect()
         ]  # partition manifest, driver-sized
         base = (
-            spark.read.parquet(tmp).where(F.col("om").isin(months)).drop("om")
+            spark.read.parquet(table).where(F.col("om").isin(months)).drop("om")
         )
         merged = apply_changeset(
             base, changeset, keys=["o_orderkey"]
@@ -661,11 +664,11 @@ def merge_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         surviving = {r.om for r in staged.select("om").distinct().collect()}
         for month in months:
             if month not in surviving:
-                shutil.rmtree(os.path.join(tmp, f"om={month}"), ignore_errors=True)
+                shutil.rmtree(os.path.join(table, f"om={month}"), ignore_errors=True)
         staged.repartition(F.col("om")).write.mode("overwrite").partitionBy(
             "om"
-        ).parquet(tmp)
-        final = spark.read.parquet(tmp)
+        ).parquet(table)
+        final = spark.read.parquet(table)
         out = (
             final.groupBy("om")
             .agg(

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from .operators.merge import apply_changeset, observe_rejects
+from .session import sized
 
 MANIFEST = "_manifest.json"
 _DIGITS = "0123456789"
@@ -132,7 +133,8 @@ def sync(
     (``operators.merge.observe_rejects``). The base is read in the
     changeset's own session: the count completes only in the session
     that runs it. ``derive(base, compacted)`` returns further entries
-    to commit alongside, computed from the same compacted rows. If any
+    to commit alongside, computed from the same compacted rows. Every
+    frame is committed at ``session.sized`` its bytes. If any
     record was malformed, :class:`Rejected` is raised after staging and
     nothing is committed. A ``batch_id`` at or below the manifest's is
     a replay of a committed batch: nothing is read and ``{}`` returned."""
@@ -146,6 +148,7 @@ def sync(
         if derive is not None:
             frames.update(derive(base, compacted))
         frames[name] = (prefix, apply_changeset(base, compacted, keys))
+    frames = {name: (prefix, sized(df)) for name, (prefix, df) in frames.items()}
     return _commit(root, frames, token, batch_id, rejects)
 
 

@@ -76,9 +76,7 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def materialize_outliving(
-    df: DataFrame, tmp_dir: str, name: str = "_graded_out"
-) -> DataFrame:
+def materialize_outliving(df: DataFrame, tmp_dir: str) -> DataFrame:
     """Persist a graded query's result so the returned frame outlives
     its temp inputs WITHOUT a driver-sized collect.
 
@@ -90,10 +88,56 @@ def materialize_outliving(
     ship the whole result through the driver (fine on a fixture,
     driver-OOM at 100 TB). Callers invoke this inside their
     ``try``, before the ``finally`` that deletes ``tmp_dir``.
+
+    The output directory, ``tmp_dir/graded_out``, has a visible name:
+    Spark skips a path that starts with ``_`` or ``.`` as hidden, and
+    a re-read of such a path logs ``All paths were ignored``. A caller
+    that also reads a table directory under ``tmp_dir`` keeps that
+    table in its own subdirectory, out of the way of this one.
     """
-    out = os.path.join(tmp_dir, name)
+    out = os.path.join(tmp_dir, "graded_out")
     df.write.mode("overwrite").parquet(out)
     return df.sparkSession.read.parquet(out).localCheckpoint(eager=True)
+
+
+def partitions_for(df: DataFrame, split_bytes: int | None = None) -> int:
+    """How many partitions ``df`` needs: ``max(1, ceil(B / split))``,
+    where B is Catalyst's size estimate of the optimized plan (planning
+    only, no job runs).
+
+    ``split`` defaults to the split Spark's own file scan takes for B
+    bytes (``FilePartition.maxSplitBytes``): ``min(maxPartitionBytes,
+    max(openCostInBytes, B / cores))``, cores being
+    ``spark.sql.files.minPartitionNum`` or the default parallelism. So
+    a frame under one open cost (4 MiB by default) is one partition, a
+    mid-size one keeps about one partition per core, and above
+    ``cores × maxPartitionBytes`` there is one per
+    ``maxPartitionBytes`` (128 MiB by default). ``optimize`` passes its
+    own target file size instead."""
+    jss = df.sparkSession._jsparkSession
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if split_bytes is None:
+        conf = jss.sessionState().conf()
+        cores = conf.filesMinPartitionNum()
+        cores = cores.get() if cores.isDefined() else jss.leafNodeDefaultParallelism()
+        split_bytes = min(
+            conf.filesMaxPartitionBytes(),
+            max(conf.filesOpenCostInBytes(), size // cores),
+        )
+    # A frame Catalyst cannot size (an RDD-backed one estimates 8 EiB)
+    # gets Spark's largest partition count, which coalesce leaves as is.
+    return max(1, min(-(-size // split_bytes), 2**31 - 1))
+
+
+def sized(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to :func:`partitions_for` its bytes: the change
+    path's one sizing rule, applied where it builds a frame whose
+    partitioning nothing chose (a decoded changeset, a merged or
+    bootstrapped table). A small commit, such as a ~1 % ``syncdb``
+    cycle or a micro-batch, then runs as one task and one file instead
+    of paying a task's and a file's fixed cost per scan split; a frame
+    with fewer partitions than the rule keeps them."""
+    return df.coalesce(partitions_for(df))
 
 
 def parallelism(spark: SparkSession, factor: int = 1) -> int:

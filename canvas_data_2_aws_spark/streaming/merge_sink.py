@@ -18,7 +18,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import replica
+from .. import replica, session
 from ..operators.merge import ACTION_UPSERT, aggregate_view, fold_view
 
 
@@ -47,7 +47,7 @@ class StreamingMergeSink:
     def bootstrap(self, base: DataFrame) -> None:
         """M2 snapshot load: commit the first version of a fresh
         ``table_dir``."""
-        replica.transact(self.table_dir, {"snapshot": ("v", base)})
+        replica.transact(self.table_dir, {"snapshot": ("v", session.sized(base))})
 
     # -- the merge loop ----------------------------------------------------
 
@@ -107,6 +107,7 @@ class StreamingIVMSink(StreamingMergeSink):
         return replica.read(self.spark, self.table_dir, "view")
 
     def bootstrap(self, base: DataFrame) -> None:
+        base = session.sized(base)
         view = aggregate_view(base, self.view_group, self.view_sum)
         replica.transact(
             self.table_dir, {"view": ("view_v", view), "snapshot": ("v", base)}

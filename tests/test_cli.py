@@ -237,6 +237,32 @@ def test_optimize_compacts_and_preserves_content(spark, sf_dir, tmp_path):
     assert len(glob.glob(f"{after_path}/part-*")) < 16
 
 
+def test_optimize_keeps_a_target_below_the_scan_split(spark, sf_dir, tmp_path):
+    """``--target-mb`` smaller than a scan split still sets the file
+    count, ceil(bytes / target), and each file holds one PK range, so
+    the footers' min/max do not overlap."""
+    import glob
+    import math
+    import os
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    replica = str(tmp_path / "optimize_small_target")
+    assert cli.main(["initdb", "--table", "orders", "--source-dir", sf,
+                     "--replica", replica]) == 0
+    before = glob.glob(f"{replica_mod.table_dir(replica, 'orders')}/part-*")
+    target = math.ceil(sum(os.path.getsize(f) for f in before) / 2**20)
+    assert target >= 2, "the table must exceed one 1 MiB target"
+    assert cli.main(["optimize", "--table", "orders", "--replica", replica,
+                     "--key", "o_orderkey", "--target-mb", "1"]) == 0
+    after = sorted(glob.glob(f"{replica_mod.table_dir(replica, 'orders')}/part-*"))
+    assert len(after) == target
+    ranges = sorted(
+        tuple(spark.read.parquet(f).agg(F.min("o_orderkey"), F.max("o_orderkey")).first())
+        for f in after
+    )
+    assert all(hi < nxt_lo for (_, hi), (nxt_lo, _) in zip(ranges, ranges[1:])), ranges
+
+
 def _delete_changeset(tmp_path, name, key_col, keys):
     import json
 
@@ -568,11 +594,103 @@ def test_syncdb_one_pass_per_table(spark, sf_dir, tmp_path, capsys):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = set(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs and jobs <= _sql_job_ids(spark), "a job ran outside a query plan"
-    assert len(jobs) <= 3, sorted(jobs)
+    # the changeset's broadcast (which fills the compaction's checkpoint)
+    # and the write: a changeset under one scan split does not shuffle
+    assert len(jobs) <= 2, sorted(jobs)
 
     (printed,) = re.findall(r"syncdb: orders now (\d+) rows", capsys.readouterr().out)
     committed = spark.read.parquet(replica_mod.table_dir(replica, "orders")).count()
     assert int(printed) == committed
+
+
+def _sync_sized(spark, sf, tmp_path, name):
+    """initdb orders + customer from ``sf``, then one two-table syncdb.
+    Returns the physical plans of the sync's compaction windows, the
+    part files each committed table has, and the committed tables."""
+    import glob
+
+    replica = str(tmp_path / name)
+    for t in ("orders", "customer"):
+        assert cli.main(["initdb", "--table", t, "--source-dir", sf,
+                         "--replica", replica]) == 0
+    orders, customer = load_table(spark, sf, "orders"), load_table(spark, sf, "customer")
+    for t, key, changes in (
+        ("orders", "o_orderkey", derive_changeset(orders)),
+        ("customer", "c_custkey", customer.where(F.col("c_custkey") % 3 == 0)
+         .withColumn("c_acctbal", F.col("c_acctbal") + 1.0)
+         .withColumn("action", F.lit("U"))),
+    ):
+        encode_envelope(changes, key_cols=[key]).coalesce(1).write.text(
+            str(tmp_path / f"{name}_{t}")
+        )
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    assert cli.main([
+        "syncdb", "--replica", replica,
+        "--table", "orders", "--changes", str(tmp_path / f"{name}_orders"),
+        "--key", "o_orderkey",
+        "--table", "customer", "--changes", str(tmp_path / f"{name}_customer"),
+        "--key", "c_custkey",
+    ]) == 0
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = [e.physicalPlanDescription() for e in executions() if e.executionId() > seen]
+    windows = [p for p in plans if "Window" in p]
+    dirs = {t: replica_mod.table_dir(replica, t) for t in ("orders", "customer")}
+    files = {t: len(glob.glob(f"{d}/part-*")) for t, d in dirs.items()}
+    return windows, files, {t: spark.read.parquet(d) for t, d in dirs.items()}
+
+
+def test_partitions_for_follows_the_scan_split(spark):
+    """``session.partitions_for`` sizes a frame as Spark's file scan
+    splits its bytes: one partition under the 4 MiB open cost, about
+    one per core in between, one per ``maxPartitionBytes`` above
+    ``cores × maxPartitionBytes``. ``spark.range`` is sized at 8 bytes
+    a row, and no job runs."""
+    from canvas_data_2_aws_spark.session import partitions_for
+
+    cores = spark.sparkContext.defaultParallelism
+    split = int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+    assert partitions_for(spark.range(100_000)) == 1  # 0.8 MB
+    mid = 10 * cores * 2**20 // 8  # 10 MiB a core
+    assert partitions_for(spark.range(mid)) == cores
+    big = 2 * cores * split // 8
+    assert partitions_for(spark.range(big)) == 2 * cores
+    assert partitions_for(spark.range(mid), 2**20) == 10 * cores
+
+
+def test_syncdb_sizes_work_to_bytes(spark, sf_dir, tmp_path):
+    """Both sides of the one sizing rule (``session.partitions_for``).
+    A changeset and a table under one scan split compact without an
+    Exchange and commit one part file each; with
+    ``spark.sql.files.maxPartitionBytes`` at a few KB the same sync
+    hash-shuffles each changeset into its window, writes several files
+    per table, and commits the same rows."""
+    import os
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    windows, files, small = _sync_sized(spark, sf, tmp_path, "one_split")
+    assert len(windows) == 2, windows
+    assert all("Exchange" not in p for p in windows), windows
+    assert files == {"orders": 1, "customer": 1}
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "8k")
+    try:
+        windows, files, split = _sync_sized(spark, sf, tmp_path, "many_splits")
+    finally:
+        spark.conf.set(key, old)
+    assert len(windows) == 2, windows
+    assert all("hashpartitioning" in p for p in windows), windows
+    assert all(n > 1 for n in files.values()), files
+    for t in ("orders", "customer"):
+        assert small[t].count() == split[t].count()
+        assert small[t].exceptAll(split[t]).count() == 0
 
 
 def test_syncdb_ties_resolve_in_file_order(spark, sf_dir, tmp_path):
